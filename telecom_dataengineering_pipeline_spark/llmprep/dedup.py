@@ -38,7 +38,7 @@ from .text import normalized_fingerprint, token_hash32, tokens
 import sys as _sys
 
 from pyspark import cloudpickle as _cp
-from ..lineage import lineage_cut, lineage_cut_eager
+from ..lineage import lineage_cut, lineage_cut_eager, release
 
 _cp.register_pickle_by_value(_sys.modules[__name__])
 
@@ -950,37 +950,24 @@ def cosine_dup_pairs(
     ).filter(F.col("cosine") >= threshold)
 
 
-def _persistent_rdd_ids(spark) -> set[int]:
-    """Ids currently in the context's persistent-RDD map (includes RDDs
-    pinned by ``localCheckpoint``, which ``DataFrame.unpersist`` — a
-    CacheManager operation — cannot release)."""
-    jmap = spark.sparkContext._jsc.getPersistentRDDs()
-    return {int(k) for k in jmap.keySet().toArray()}
-
-
-def _release_rdds(spark, ids: set[int]) -> None:
-    """Unpersist the given persistent-RDD ids (no-op for ids already gone)."""
-    if not ids:
-        return
-    jmap = spark.sparkContext._jsc.getPersistentRDDs()
-    for k in jmap.keySet().toArray():
-        if int(k) in ids:
-            jmap.get(k).unpersist()
-
-
-def connected_dup_groups_star(pairs: DataFrame, max_iters: int = 25) -> DataFrame:
-    """Connected components via alternating large-star/small-star rounds
-    (Kiveris et al., "Connected Components in MapReduce and Beyond", 2014)
-    — same contract as ``connected_dup_groups`` but O(log n) rounds instead
-    of O(component diameter), so pathological chains (a 1000-link chain of
-    near-dup revisions) converge in ~10 rounds, not ~1000.
+def connected_dup_groups(pairs: DataFrame, max_iters: int = 25) -> DataFrame:
+    """Transitive dup groups from a pair list: connected components via
+    alternating large-star/small-star rounds (Kiveris et al., "Connected
+    Components in MapReduce and Beyond", SoCC 2014). Rounds grow as
+    O(log n), not with the component diameter, so a 1000-link chain of
+    near-dup revisions converges in ~10 rounds.
 
     large-star: every node points its larger neighbors at the minimum of
     its closed neighborhood; small-star: every node folds its smaller
     neighbors (and itself) onto that minimum. Both are one groupBy + one
     equi-join; each round's edge set is keyed by node — no all-pairs step
-    anywhere. Only scalar per-round change counts reach the driver.
-    """
+    anywhere. Each round's edge relation is cut eagerly and the superseded
+    one released, so storage stays constant in the round count. Only the
+    per-round "any label changed" probe reaches the driver.
+
+    Returns (doc_id, group_id) where group_id is the component's minimum
+    doc id. Raises ``RuntimeError`` if labels still change after
+    ``max_iters`` rounds — never a partial closure."""
     # Directed-down canonical edge list (a > b), self-loops dropped.
     e = (
         pairs.select(
@@ -989,8 +976,8 @@ def connected_dup_groups_star(pairs: DataFrame, max_iters: int = 25) -> DataFram
         .filter(F.col("a") != F.col("b"))
         .distinct()
         # Round 1's large-star consumes this twice (both union directions)
-        # before the first eager round checkpoint exists — cut the lineage
-        # so the upstream pair pipeline executes once, not per reference.
+        # before the first eager round cut exists — cut the lineage so the
+        # upstream pair pipeline executes once, not per reference.
         .transform(lineage_cut)
     )
     all_nodes = (
@@ -1006,10 +993,9 @@ def connected_dup_groups_star(pairs: DataFrame, max_iters: int = 25) -> DataFram
             mins.withColumnRenamed("a", "doc_id"), "doc_id", "left"
         ).select("doc_id", F.coalesce("_lbl", "doc_id").alias("label"))
 
-    spark = pairs.sparkSession
-    prev_labels = None
-    prev_ids: set[int] = set()
-    for it in range(max_iters):
+    prev_labels = _labels(e)
+    for _ in range(max_iters):
+        src = e
         # large-star over both edge directions
         both = e.union(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
         mins = both.groupBy("a").agg(F.min("b").alias("mn"))
@@ -1029,94 +1015,22 @@ def connected_dup_groups_star(pairs: DataFrame, max_iters: int = 25) -> DataFram
             .union(mins.select("a", F.col("mn").alias("b")))
             .filter(F.col("a") != F.col("b"))
             .distinct()
+            .transform(lineage_cut_eager)
         )
-        # Eager checkpoint so the pinned RDD registers NOW: unpersisting a
-        # checkpointed DataFrame is a CacheManager no-op, so superseded
-        # rounds are released by persistent-RDD id instead (id-diff around
-        # the checkpoint — without this, ~max_iters edge RDDs stay pinned).
-        ids_before = _persistent_rdd_ids(spark)
-        e = e.transform(lineage_cut_eager)
-        new_ids = _persistent_rdd_ids(spark) - ids_before
         labels = _labels(e)
-        if prev_labels is not None:
-            changed = (
-                labels.join(prev_labels.withColumnRenamed("label", "_old"), "doc_id")
-                .filter(F.col("label") != F.col("_old"))
-                .count()
-            )
-            if changed == 0:
-                # the returned _labels(e) still reads THIS round's
-                # checkpoint — release the superseded previous round only
-                _release_rdds(spark, prev_ids)
-                break
-        _release_rdds(spark, prev_ids)
-        prev_ids = new_ids
+        done = (
+            labels.join(prev_labels.withColumnRenamed("label", "_old"), "doc_id")
+            .filter(F.col("label") != F.col("_old"))
+            .isEmpty()
+        )
+        # prev_labels (the last reader of src) is spent: free src's round.
+        release(src)
+        if done:
+            return labels.select("doc_id", F.col("label").alias("group_id"))
         prev_labels = labels
-    return _labels(e).select("doc_id", F.col("label").alias("group_id"))
-
-
-def connected_dup_groups(pairs: DataFrame, max_iters: int = 20) -> DataFrame:
-    """Transitive dup groups from a pair list: connected components by
-    iterative min-label propagation (the DataFrame form of the standard
-    CC algorithm; GraphFrames' connectedComponents does the same dance).
-
-    Each round every vertex adopts the minimum label among itself and its
-    neighbors; convergence needs O(component diameter) rounds — near-dup
-    components are shallow (stars/chains of a few docs), so the loop exits
-    in 2-4 rounds. The only driver-side values are the per-round change
-    counts (scalars); labels never collect. Returns (doc_id, group_id)
-    where group_id is the component's minimum doc id."""
-    edges = (
-        pairs.select(F.col("doc1").alias("a"), F.col("doc2").alias("b"))
-        .union(pairs.select(F.col("doc2").alias("a"), F.col("doc1").alias("b")))
-        .distinct()
-        # The edge list is re-joined EVERY round (plus the label init):
-        # without a cut each round re-executes the whole upstream pair
-        # pipeline (for the dup-group family that is the full MinHash
-        # banded join + exact verify, per round). Materialize once.
-        .transform(lineage_cut)
+    raise RuntimeError(
+        f"connected_dup_groups: labels still changing after max_iters={max_iters} rounds"
     )
-    labels = (
-        edges.select(F.col("a").alias("doc_id"))
-        .distinct()
-        .withColumn("label", F.col("doc_id"))
-    )
-    spark = pairs.sparkSession
-    prev_df = None  # persist()-backed round: DataFrame.unpersist works
-    prev_ids: set[int] = set()  # checkpoint-backed round: release by RDD id
-    for it in range(max_iters):
-        prop = edges.join(labels, edges["a"] == labels["doc_id"]).select(
-            F.col("b").alias("doc_id"), "label"
-        )
-        new_labels = (
-            labels.union(prop).groupBy("doc_id").agg(F.min("label").alias("label"))
-        )
-        # Truncate lineage every few rounds — iterative self-joins otherwise
-        # grow the plan exponentially and executor storage accumulates. The
-        # checkpoint rounds pin an RDD that DataFrame.unpersist cannot
-        # release (CacheManager no-op), so those are dropped by id.
-        if it % 4 == 3:
-            ids_before = _persistent_rdd_ids(spark)
-            new_labels = new_labels.transform(lineage_cut_eager)
-            new_ids = _persistent_rdd_ids(spark) - ids_before
-            new_df = None
-        else:
-            new_labels = new_labels.persist()
-            new_ids = set()
-            new_df = new_labels
-        changed = (
-            new_labels.join(labels.withColumnRenamed("label", "old"), "doc_id")
-            .filter(F.col("label") != F.col("old"))
-            .count()
-        )
-        if prev_df is not None:
-            prev_df.unpersist()
-        _release_rdds(spark, prev_ids)
-        prev_df, prev_ids = new_df, new_ids
-        labels = new_labels
-        if changed == 0:
-            break
-    return labels.select("doc_id", F.col("label").alias("group_id"))
 
 
 def dup_ngram_stats(

@@ -97,21 +97,22 @@ def entity_resolution_clusters(
     prefix_len: int = 40,
     band_width: int = 100,
     max_dist: int = 2,
-    max_iters: int = 10,
+    max_iters: int = 25,
 ) -> DataFrame:
     """Entity resolution end to end: blocked fuzzy candidate pairs
     (first-token × length-band blocking, JVM Levenshtein verify on
-    candidates only) → transitive closure via min-label connected
-    components → one ``cluster_id`` per record (the cluster's minimum
-    id; records with no fuzzy neighbor form singleton clusters of
+    candidates only) → transitive closure via large-star/small-star
+    connected components → one ``cluster_id`` per record (the cluster's
+    minimum id; records with no fuzzy neighbor form singleton clusters of
     themselves). The record-linkage composition every dedup/householding
     pipeline runs: A≈B and B≈C land A, B, C in ONE cluster even when A
     and C are farther than ``max_dist`` apart — the closure is the point.
 
     Scale shape: inherits the pair stage's no-all-pairs guarantee
     (equi-join on block keys, candidates-only verification) and CC's
-    label-propagation cost (O(component diameter) rounds, labels
-    node-sized, only per-round change counts reach the driver)."""
+    star-round cost (O(log n) rounds, labels node-sized, only a
+    per-round change probe reaches the driver; raises instead of
+    returning a partial closure after ``max_iters`` rounds)."""
     from .dedup import connected_dup_groups
 
     pairs = fuzzy_prefix_pairs(

@@ -89,7 +89,7 @@ def grid_cluster_cells(
     of the dense-cell relation against itself (each undirected adjacency
     generated once — E/NE/N/NW, the canonical-election trick), never a
     distance join; components form via the O(log n) large-star/small-star
-    rounds of ``llmprep.dedup.connected_dup_groups_star`` over the
+    rounds of ``llmprep.dedup.connected_dup_groups`` over the
     metadata-sized cell graph.
 
     Determinism: counts exact; the cluster id is the component's MINIMUM
@@ -100,7 +100,7 @@ def grid_cluster_cells(
     if min_pts < 1:
         raise ValueError("grid_cluster_cells needs min_pts >= 1")
     from ..functions.geo import grid_cell
-    from ..llmprep.dedup import connected_dup_groups_star
+    from ..llmprep.dedup import connected_dup_groups
 
     cell = grid_cell(F.col(lat_col), F.col(lon_col), cell_deg)
     dense = (
@@ -146,7 +146,7 @@ def grid_cluster_cells(
     edges = probes.join(
         cells.select(F.col("_cid").alias("doc2")), "doc2"
     ).select("doc1", "doc2")
-    labels = connected_dup_groups_star(edges)
+    labels = connected_dup_groups(edges)
     labeled = cells.join(
         labels.withColumnRenamed("doc_id", "_cid"), "_cid", "left"
     ).withColumn(

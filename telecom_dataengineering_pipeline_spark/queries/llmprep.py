@@ -711,9 +711,9 @@ def ann_ivf_nprobe_topk_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # Transitive dup groups: connected components over the near-dup pair graph.
-# Spark runs iterative min-label propagation (O(diameter) rounds, labels
-# never collect); the oracle replicates it with a recursive CTE over the
-# ground-truth exact-Jaccard pairs.
+# Spark runs large-star/small-star rounds (O(log n) rounds, labels never
+# collect); the oracle computes the same closure with a recursive CTE over
+# the ground-truth exact-Jaccard pairs.
 # ---------------------------------------------------------------------------
 
 _CC_ORACLE = f"""
@@ -758,13 +758,12 @@ def dedup_connected_groups_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register("dedup_connected_groups_star", oracle=_CC_ORACLE, tags=("LLM", "dedup", "iterative"))
 def dedup_connected_groups_star_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Same transitive dup groups, O(log n)-round large-star/small-star
-    algorithm — the variant that survives deep near-dup chains (revision
-    histories) where min-label propagation needs diameter rounds."""
-    from ..llmprep.dedup import connected_dup_groups_star
+    """The same transitive dup groups as ``dedup_connected_groups``: both
+    names run ``connected_dup_groups`` and share one oracle."""
+    from ..llmprep.dedup import connected_dup_groups
 
     pairs = minhash_near_dup_pairs(load_table(spark, sf_dir, "documents"), threshold=0.5)
-    return connected_dup_groups_star(pairs)
+    return connected_dup_groups(pairs)
 
 
 # ---------------------------------------------------------------------------

@@ -550,8 +550,8 @@ _ER_ORACLE = _ER_CTES + "\nSELECT doc_id, cluster_id FROM clusters"
 @register("entity_resolution_clusters", oracle=_ER_ORACLE, tags=("LLM", "dedup", "iterative"))
 def entity_resolution_clusters_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One cluster id per document: (first-token × length-band) blocked
-    candidates, JVM Levenshtein verify on candidates only, min-label
-    connected components. No all-pairs step anywhere; labels are
+    candidates, JVM Levenshtein verify on candidates only, large-star/
+    small-star connected components. No all-pairs step anywhere; labels are
     node-sized and never collect."""
     from ..llmprep.fuzzy import entity_resolution_clusters
 

@@ -65,28 +65,45 @@ def test_stratified_sample_exactly_k_per_stratum(spark, sf_smoke):
 def test_connected_groups_star_on_deep_chain(spark):
     """A 1000-link chain converges in O(log n) star rounds (min-label
     propagation would need ~1000 diameter rounds). Every node must land in
-    component 0, and both algorithms must agree on a branchy graph."""
+    component 0, and a branchy multi-component graph gets each
+    component's minimum id."""
     from telecom_dataengineering_pipeline_spark.llmprep.dedup import (
         connected_dup_groups,
-        connected_dup_groups_star,
     )
 
     chain = spark.createDataFrame(
         [(i, i + 1) for i in range(1000)], "doc1 long, doc2 long"
     ).repartition(8)
-    out = connected_dup_groups_star(chain, max_iters=15)
+    out = connected_dup_groups(chain, max_iters=15)
     rows = out.collect()
     assert len(rows) == 1001
     assert {r["group_id"] for r in rows} == {0}
 
-    # cross-check against the propagate variant on a multi-component graph
     pairs = spark.createDataFrame(
         [(1, 2), (2, 3), (3, 4), (10, 11), (11, 12), (20, 21), (5, 4)],
         "doc1 long, doc2 long",
     )
-    a = sorted((r["doc_id"], r["group_id"]) for r in connected_dup_groups(pairs).collect())
-    b = sorted((r["doc_id"], r["group_id"]) for r in connected_dup_groups_star(pairs).collect())
-    assert a == b
+    got = {r["doc_id"]: r["group_id"] for r in connected_dup_groups(pairs).collect()}
+    assert got == {
+        1: 1, 2: 1, 3: 1, 4: 1, 5: 1, 10: 10, 11: 10, 12: 10, 20: 20, 21: 20
+    }
+
+
+def test_connected_groups_full_closure_or_raise(spark):
+    """A 64-link chain (diameter 64) is one group; a round budget too small
+    to converge raises instead of returning a partial labeling."""
+    from telecom_dataengineering_pipeline_spark.llmprep.dedup import (
+        connected_dup_groups,
+    )
+
+    chain = spark.createDataFrame(
+        [(i, i + 1) for i in range(64)], "doc1 long, doc2 long"
+    )
+    rows = connected_dup_groups(chain).collect()
+    assert len(rows) == 65
+    assert {r["group_id"] for r in rows} == {0}
+    with pytest.raises(RuntimeError, match="max_iters=2"):
+        connected_dup_groups(chain, max_iters=2)
 
 
 def test_capped_sample_per_key_deterministic(spark):

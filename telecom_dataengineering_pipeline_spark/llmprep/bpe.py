@@ -54,6 +54,27 @@ def _tok_array(s):
     return F.slice(sp, 2, F.greatest(F.size(sp) - 2, F.lit(0)))
 
 
+def _top_pair(state: DataFrame) -> DataFrame:
+    """One round's merge winner over the sentinel strings ``s``: the 1-row
+    (w1, w2, tf) of the most frequent adjacent pair, ties broken by pair."""
+    a = _tok_array(F.col("s"))
+    n = F.size(a)
+    prs = state.select(
+        F.explode(
+            F.arrays_zip(
+                F.slice(a, 1, F.greatest(n - 1, F.lit(0))).alias("x"),
+                F.slice(a, 2, F.greatest(n - 1, F.lit(0))).alias("y"),
+            )
+        ).alias("p")
+    ).select(F.col("p.x").alias("w1"), F.col("p.y").alias("w2"))
+    return (
+        prs.groupBy("w1", "w2")
+        .agg(F.count(F.lit(1)).cast("long").alias("tf"))
+        .orderBy(F.col("tf").desc(), F.col("w1").asc(), F.col("w2").asc())
+        .limit(1)
+    )
+
+
 def bpe_train_rounds(
     docs: DataFrame,
     rounds: int = 2,
@@ -67,22 +88,7 @@ def bpe_train_rounds(
     state = _sentinel_string(docs, text_col, id_col).transform(lineage_cut)
     out: DataFrame | None = None
     for rnd in range(1, rounds + 1):
-        a = _tok_array(F.col("s"))
-        n = F.size(a)
-        prs = state.select(
-            F.explode(
-                F.arrays_zip(
-                    F.slice(a, 1, F.greatest(n - 1, F.lit(0))).alias("x"),
-                    F.slice(a, 2, F.greatest(n - 1, F.lit(0))).alias("y"),
-                )
-            ).alias("p")
-        ).select(F.col("p.x").alias("w1"), F.col("p.y").alias("w2"))
-        winner = (
-            prs.groupBy("w1", "w2")
-            .agg(F.count(F.lit(1)).cast("long").alias("tf"))
-            .orderBy(F.col("tf").desc(), F.col("w1").asc(), F.col("w2").asc())
-            .limit(1)
-        )
+        winner = _top_pair(state)
         pat = F.concat(F.lit(SEP), F.col("w1"), F.lit(SEP), F.col("w2"), F.lit(SEP))
         rep = F.concat(F.lit(SEP), F.col("w1"), F.lit(" "), F.col("w2"), F.lit(SEP))
         state = (
@@ -119,8 +125,8 @@ def bpe_learn_merges(
     id_col: str = "doc_id",
 ) -> "list[tuple[str, str]]":
     """Train and RETURN the merge table as ``[(w1, w2), ...]`` rank-ordered —
-    the driver-side handoff :func:`bpe_encode` consumes. Identical loop to
-    :func:`bpe_train_rounds` (same winner selection, same sentinel replace),
+    the driver-side handoff :func:`bpe_encode` consumes. Same round step as
+    :func:`bpe_train_rounds` (:func:`_top_pair`, same sentinel replace),
     but collects only the per-round winner: one 1-row collect per round, the
     merge table itself is O(rounds) — bounded regardless of corpus size.
     (``bpe_train_rounds`` can't serve here: its ``merged_pair`` column joins
@@ -129,23 +135,7 @@ def bpe_learn_merges(
     state = _sentinel_string(docs, text_col, id_col).transform(lineage_cut)
     merges: list[tuple[str, str]] = []
     for _ in range(rounds):
-        a = _tok_array(F.col("s"))
-        n = F.size(a)
-        prs = state.select(
-            F.explode(
-                F.arrays_zip(
-                    F.slice(a, 1, F.greatest(n - 1, F.lit(0))).alias("x"),
-                    F.slice(a, 2, F.greatest(n - 1, F.lit(0))).alias("y"),
-                )
-            ).alias("p")
-        ).select(F.col("p.x").alias("w1"), F.col("p.y").alias("w2"))
-        winner = (
-            prs.groupBy("w1", "w2")
-            .agg(F.count(F.lit(1)).cast("long").alias("tf"))
-            .orderBy(F.col("tf").desc(), F.col("w1").asc(), F.col("w2").asc())
-            .limit(1)
-            .collect()
-        )
+        winner = _top_pair(state).collect()
         if not winner:
             break
         w1, w2 = winner[0]["w1"], winner[0]["w2"]

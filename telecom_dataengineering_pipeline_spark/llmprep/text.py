@@ -52,10 +52,6 @@ def token_hash32(col: Column) -> Column:
     return F.conv(F.substring(F.md5(col), 1, 8), 16, 10).cast("long")
 
 
-def word_count(col: Column | str) -> Column:
-    return F.size(tokens(col))
-
-
 def stopword_ratio(toks: Column) -> Column:
     hits = F.size(F.filter(toks, lambda t: t.isin(*STOPWORDS)))
     return hits.cast("double") / F.greatest(F.size(toks), F.lit(1))

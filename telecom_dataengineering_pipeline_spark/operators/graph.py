@@ -1,11 +1,15 @@
-"""Iterative graph analytics: fixed-point PageRank.
+"""Iterative graph analytics: fixed-point PageRank, centrality, and
+bounded distances on ONE frontier-relaxation loop (:func:`_relax`, shared
+by BFS, closeness and Bellman–Ford) that cuts each round eagerly and frees
+the round it supersedes with ``lineage.release``.
 
 Complements the connected-components tier (``llmprep/dedup.py``
-large-star/small-star) with the other workhorse graph primitive. Pregel
-shape per iteration: contributions flow along edges (join rank → edges),
-aggregate at the destination (map-side-combined sum), recombine with the
-teleport term — ranks and edges shuffle on node id, nothing ever
-collects to the driver, and iterations unroll into one lazy plan.
+large-star/small-star) with the other workhorse graph primitives.
+PageRank's Pregel shape per iteration: contributions flow along edges
+(join rank → edges), aggregate at the destination (map-side-combined
+sum), recombine with the teleport term — ranks and edges shuffle on node
+id, nothing ever collects to the driver, and iterations unroll into one
+lazy plan.
 
 Arithmetic is **fixed-point integer** (ranks scaled by ``scale``,
 divisions are integer ``div``): float PageRank sums doubles in
@@ -25,7 +29,7 @@ from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-from ..lineage import lineage_cut
+from ..lineage import lineage_cut, lineage_cut_eager, release
 
 
 def parity_encode(key, odd: bool):
@@ -588,6 +592,85 @@ def hits_scores(
     )
 
 
+def _unit_edges(edges: DataFrame) -> DataFrame:
+    """Distinct (src, dst) pairs weighted 1, cut: hop counts as path costs."""
+    return (
+        edges.select("src", "dst", F.lit(1).cast("long").alias("w"))
+        .distinct()
+        .transform(lineage_cut)
+    )
+
+
+def _seeds(e: DataFrame, sources: list, keys: list[str]) -> DataFrame:
+    """Round 0 of :func:`_relax`, cut: each seed that is a node of ``e``
+    (distance is defined on the graph) at distance 0, under every key."""
+    nodes = e.select(F.col("src").alias("node")).unionAll(
+        e.select(F.col("dst").alias("node"))
+    )
+    return (
+        nodes.filter(F.col("node").isin(sources))
+        .distinct()
+        .select(
+            *(F.col("node").alias(k) for k in keys), F.lit(0).cast("long").alias("dist")
+        )
+        .transform(lineage_cut)
+    )
+
+
+def _relax(e: DataFrame, start: DataFrame, keys: list[str], rounds: int) -> DataFrame:
+    """The frontier-relaxation loop under :func:`bfs_hop_distance`,
+    :func:`closeness_centrality` and :func:`bellman_ford_distance`. ``e``
+    is (src, dst, w), ``w`` integral and non-negative; ``start`` is a
+    lineage cut of (*keys, dist), ``keys`` ``["node"]`` or ``["seed",
+    "node"]``. Returns (*keys, dist): the shortest distance per key using
+    at most ``rounds`` edges.
+
+    SPFA-style: round r relaxes OUT of the keys improved in round r−1 only
+    (provably equal to full per-round relaxation: every shortest ≤r-edge
+    path improves through an improved prefix), so settled regions leave
+    the shuffle early. Each round's merged relation is cut EAGERLY before
+    the round it supersedes (round 1: ``start``) is released — the old
+    round must stay readable until the new cut is complete, and a lazy cut
+    probed by ``isEmpty`` may hold only some partitions."""
+    dist = frontier = prev = start
+    for _ in range(rounds):
+        cand = (
+            e.join(frontier, e["src"] == frontier["node"])
+            .select(
+                *keys[:-1],
+                F.col("dst").alias("node"),
+                (F.col("dist") + F.col("w")).alias("dist"),
+            )
+            .groupBy(*keys)
+            .agg(F.min("dist").alias("dist"))
+        )
+        # One full-outer join merges the round: both the updated distance
+        # relation (least of old/candidate — ≡ the union + min-regroup it
+        # replaces, since the keys are unique on both sides) and the
+        # improved frontier are projections of the SAME merged relation, so
+        # each round pays one join exchange + one checkpoint.
+        merged = (
+            dist.select(*keys, F.col("dist").alias("_old"))
+            .join(cand.select(*keys, F.col("dist").alias("_new")), keys, "full")
+            .transform(lineage_cut_eager)
+        )
+        release(prev)
+        prev = merged
+        dist = merged.select(*keys, F.least("_old", "_new").alias("dist"))
+        frontier = merged.filter(
+            F.col("_old").isNull() | (F.col("_new") < F.col("_old"))
+        ).select(*keys, F.col("_new").alias("dist"))
+        # Identity-round collapse: once the frontier is empty every
+        # remaining round is a provable no-op — cand is empty, the full
+        # outer join returns exactly dist's rows with _new NULL, and
+        # least(_old, NULL) = _old — so skip building the dead rounds (the
+        # result is the SAME relation the unrolled rounds produce, so the
+        # fixed-round oracle contract holds).
+        if frontier.isEmpty():
+            break
+    return dist
+
+
 def bfs_hop_distance(
     edges: DataFrame,
     source_nodes: Sequence[int],
@@ -601,52 +684,28 @@ def bfs_hop_distance(
     tier). Directed as given — callers union the reverse edges for
     undirected graphs.
 
-    Scale shape: the frontier stays SPARSE (the PPR discipline) — round
-    i joins edges against the hop-(i−1) FRONTIER only (never the full
-    distance relation), anti-joins the visited set to keep each node's
-    FIRST (minimal) hop, and nodes outside the i-hop ball never enter
-    any shuffle. The loop runs a fixed ``max_hops`` rounds (iteration
-    count is a query parameter, the engine's iterative-operator
-    contract); an exhausted frontier makes the remaining rounds empty
-    joins. Per-round lazy localCheckpoints keep plan growth linear.
+    Scale shape: :func:`_relax` over the distinct edges with unit
+    weights — the shortest path using at most ``max_hops`` unit edges IS
+    the minimum hop count within ``max_hops`` hops. The frontier stays
+    SPARSE (the PPR discipline): round i joins edges against the nodes
+    first reached in round i−1 only, and nodes outside the i-hop ball
+    never enter any shuffle. At most ``max_hops`` rounds (iteration count
+    is a query parameter, the engine's iterative-operator contract); an
+    empty frontier ends the loop early with the same result.
 
-    Determinism: hop counts are exact integers; min-hop is structural
-    (first discovery wins and the anti-join makes discovery exclusive),
-    so the result is set-deterministic regardless of partitioning.
-    Seeds not present in the edge relation are dropped (distance is
-    defined on the graph). Returns (node, hop) with hop 0 for seeds.
+    Determinism: hop counts are exact integer minima, so the result is
+    set-deterministic regardless of partitioning. Seeds not present in
+    the edge relation are dropped (distance is defined on the graph).
+    Returns (node, hop) with hop 0 for seeds.
     """
     if max_hops < 1:
         raise ValueError("bfs_hop_distance needs max_hops >= 1")
     sources = list(source_nodes)
     if not sources:
         raise ValueError("bfs_hop_distance needs a non-empty seed set")
-    edges = edges.select("src", "dst").distinct().transform(lineage_cut)
-    nodes = (
-        edges.select(F.col("src").alias("node"))
-        .unionAll(edges.select(F.col("dst").alias("node")))
-        .distinct()
-    )
-    dist = (
-        nodes.filter(F.col("node").isin(sources))
-        .select("node", F.lit(0).cast("int").alias("hop"))
-        .transform(lineage_cut)
-    )
-    frontier = dist
-    for h in range(1, max_hops + 1):
-        reached = (
-            edges.join(frontier, edges["src"] == frontier["node"])
-            .select(F.col("dst").alias("node"))
-            .distinct()
-        )
-        fresh = (
-            reached.join(dist, "node", "left_anti")
-            .select("node", F.lit(h).cast("int").alias("hop"))
-            .transform(lineage_cut)
-        )
-        dist = dist.unionAll(fresh).transform(lineage_cut)
-        frontier = fresh
-    return dist
+    e = _unit_edges(edges)
+    dist = _relax(e, _seeds(e, sources, ["node"]), ["node"], max_hops)
+    return dist.select("node", F.col("dist").cast("int").alias("hop"))
 
 
 def degree_assortativity(edges: DataFrame) -> DataFrame:
@@ -733,12 +792,11 @@ def closeness_centrality(
     centrality numbers): closeness = reached/Σd over the ≤``max_hops``
     ball, harmonic = Σ 1/d (robust to disconnection by construction).
 
-    Scale shape: the labeled frontier ((seed, node) pairs) stays sparse
-    exactly like the BFS it extends — round i joins edges against the
-    hop-(i−1) frontier only, anti-joins the visited relation on the
-    COMPOSITE key, and state is O(|seeds| · ball), a query-parameter
-    bound, never O(|seeds| · V). Fixed ``max_hops`` rounds with lazy
-    per-round localCheckpoints (linear plan growth).
+    Scale shape: the BFS it extends, keyed by (seed, node) — :func:`_relax`
+    over unit-weight edges with one distance field per seed, so the
+    labeled frontier stays sparse and state is O(|seeds| · ball), a
+    query-parameter bound, never O(|seeds| · V). At most ``max_hops``
+    rounds; an empty frontier ends the loop early with the same result.
 
     Determinism: distances are exact structural integers; harmonic
     terms 1/d round to 9 then DECIMAL-sum; final ratios are fixed-shape
@@ -751,33 +809,11 @@ def closeness_centrality(
     sources = list(source_nodes)
     if not sources:
         raise ValueError("closeness_centrality needs a non-empty seed set")
-    edges = edges.select("src", "dst").distinct().transform(lineage_cut)
-    nodes = (
-        edges.select(F.col("src").alias("node"))
-        .unionAll(edges.select(F.col("dst").alias("node")))
-        .distinct()
+    e = _unit_edges(edges)
+    keys = ["seed", "node"]
+    dist = _relax(e, _seeds(e, sources, keys), keys, max_hops).select(
+        *keys, F.col("dist").cast("int").alias("hop")
     )
-    dist = (
-        nodes.filter(F.col("node").isin(sources))
-        .select(
-            F.col("node").alias("seed"), "node", F.lit(0).cast("int").alias("hop")
-        )
-        .transform(lineage_cut)
-    )
-    frontier = dist
-    for h in range(1, max_hops + 1):
-        reached = (
-            edges.join(frontier, edges["src"] == frontier["node"])
-            .select("seed", F.col("dst").alias("node"))
-            .distinct()
-        )
-        fresh = (
-            reached.join(dist, ["seed", "node"], "left_anti")
-            .select("seed", "node", F.lit(h).cast("int").alias("hop"))
-            .transform(lineage_cut)
-        )
-        dist = dist.unionAll(fresh).transform(lineage_cut)
-        frontier = fresh
     h_term = F.when(
         F.col("hop") > 0,
         F.round(F.lit(1.0) / F.col("hop").cast("double"), 9).cast("decimal(28,9)"),
@@ -855,71 +891,24 @@ def bellman_ford_distance(
     and min-election exact, the graph tier's fixed-point discipline.
     Directed as given; union reverse edges for undirected graphs.
 
-    Scale shape: SPFA-style frontier — round r relaxes OUT of the nodes
-    whose distance improved in round r−1 only (provably equal to full
-    per-round relaxation: every shortest ≤r-edge path improves through
-    an improved prefix), so settled regions leave the shuffle early;
-    per-round lazy localCheckpoints keep plan growth linear. After R
-    rounds the result is EXACTLY "shortest distance using at most R
-    edges" — a deterministic object the oracle unrolls to, converged or
-    not (the k-core lesson: never trust convergence, pin the round
-    count).
+    Scale shape: :func:`_relax`, the frontier loop shared with BFS and
+    closeness. After R rounds the result is EXACTLY "shortest distance
+    using at most R edges" — a deterministic object the oracle unrolls
+    to, converged or not (the k-core lesson: never trust convergence, pin
+    the round count).
 
     Returns (node, dist) for nodes within ``rounds`` edges of the seed
-    set (seeds at 0). Negative weights are rejected."""
+    set (seeds at 0). Negative weights are rejected: the edge cut raises
+    an error naming the weight and its edge."""
     if rounds < 1:
         raise ValueError("bellman_ford_distance needs rounds >= 1")
     sources = list(source_nodes)
     if not sources:
         raise ValueError("bellman_ford_distance needs a non-empty seed set")
-    e = edges.select(
-        "src", "dst", F.col("w").cast("long").alias("w")
-    ).transform(lineage_cut)
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .unionAll(e.select(F.col("dst").alias("node")))
-        .distinct()
-    )
-    dist = (
-        nodes.filter(F.col("node").isin(sources))
-        .select("node", F.lit(0).cast("long").alias("dist"))
-        .transform(lineage_cut)
-    )
-    frontier = dist
-    for _ in range(rounds):
-        cand = (
-            e.join(frontier, e["src"] == frontier["node"])
-            .select(F.col("dst").alias("node"), (F.col("dist") + F.col("w")).alias("dist"))
-            .groupBy("node")
-            .agg(F.min("dist").alias("dist"))
-        )
-        # One full-outer join merges the round: both the updated distance
-        # relation (least of old/candidate — ≡ the union + min-regroup it
-        # replaces, since node is unique on both sides) and the improved
-        # frontier are projections of the SAME merged relation, so each
-        # round pays one join exchange + one checkpoint instead of a join
-        # + a dist-sized union aggregate + two checkpoints.
-        merged = (
-            dist.select("node", F.col("dist").alias("_old"))
-            .join(cand.select("node", F.col("dist").alias("_new")), "node", "full")
-            .transform(lineage_cut)
-        )
-        dist = merged.select("node", F.least("_old", "_new").alias("dist"))
-        frontier = merged.filter(
-            F.col("_old").isNull() | (F.col("_new") < F.col("_old"))
-        ).select("node", F.col("_new").alias("dist"))
-        # Identity-round collapse: once the frontier is empty every
-        # remaining round is a provable no-op — cand is empty, the full
-        # outer join returns exactly dist's rows with _new NULL, and
-        # least(_old, NULL) = _old — so skip building the dead rounds
-        # instead of paying their edge-scan join + dist-sized checkpoint
-        # each (the result is the SAME relation the unrolled rounds
-        # produce, converged or not, so the fixed-round oracle contract
-        # holds). The probe is a take(1) on the already-checkpointed
-        # merged relation; rounds are sequential barriers anyway.
-        if frontier.isEmpty():
-            break
-    return dist
+    neg = F.format_string("negative weight w=%s on edge %s -> %s", "w", "src", "dst")
+    w = F.when(F.col("w") < 0, F.raise_error(neg)).otherwise(F.col("w").cast("long"))
+    e = edges.select("src", "dst", w.alias("w")).transform(lineage_cut)
+    return _relax(e, _seeds(e, sources, ["node"]), ["node"], rounds)
 
 
 def bellman_ford_oracle_sql(

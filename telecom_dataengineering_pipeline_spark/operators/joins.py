@@ -51,10 +51,6 @@ def collapse_dim_snowflake(
     return out.select(*keep)
 
 
-def coalesce_unknown(col: Column, sentinel: str = "UNKNOWN") -> Column:
-    return F.coalesce(col, F.lit(sentinel))
-
-
 def left_join_nonnull_filter(
     left: DataFrame, right: DataFrame, on: Sequence[str], nonnull_col: str
 ) -> DataFrame:

@@ -476,36 +476,87 @@ def test_bellman_ford_matches_dijkstra_reference(spark):
     assert got[3] == 3 and 5 not in got and 6 not in got
 
 
-def test_bellman_ford_collapses_identity_rounds(spark):
-    """r13 optimization: once the frontier is empty every remaining round
-    is an identity map (cand = ∅ ⇒ least(_old, NULL) = _old), so the loop
+_DISTANCE_FNS = ["bellman_ford_distance", "bfs_hop_distance", "closeness_centrality"]
+
+
+def _chain_distances(spark, name, n, rounds):
+    """Run one distance operator from seed 0 over the chain 0 -> ... -> n
+    (unit weights) and return comparable results: {node: dist/hop}, or
+    closeness's {seed: (n_reached, total_hops, closeness, harmonic)}."""
+    from telecom_dataengineering_pipeline_spark.operators import graph
+
+    df = spark.createDataFrame(
+        [(i, i + 1, 1) for i in range(n)], "src long, dst long, w long"
+    )
+    rows = getattr(graph, name)(df, [0], rounds).collect()
+    if name == "closeness_centrality":
+        return {r["seed"]: tuple(r)[1:] for r in rows}
+    return {r[0]: r[1] for r in rows}
+
+
+def _chain_expected(name, reach):
+    """The exact results of :func:`_chain_distances` when ``reach`` nodes
+    past the seed are within the round budget."""
+    if name != "closeness_centrality":
+        return {i: i for i in range(reach + 1)}
+    from decimal import Decimal
+
+    hops = range(1, reach + 1)
+    harmonic = sum(Decimal(f"{1 / h:.9f}") for h in hops)
+    return {
+        0: (reach, sum(hops), round(reach / sum(hops), 6), round(float(harmonic), 6))
+    }
+
+
+@pytest.mark.parametrize("name", _DISTANCE_FNS)
+def test_distance_loop_collapses_identity_rounds(spark, name):
+    """Once the frontier is empty every remaining round is an identity map
+    (cand = ∅ ⇒ least(_old, NULL) = _old), so the shared relaxation loop
     must stop building rounds instead of paying a join + checkpoint per
-    dead round. Observable: each executed round materializes exactly one
-    localCheckpoint (the merged relation), so a huge round budget on a
-    tiny-diameter graph must NOT add ~rounds checkpoints. Results must be
-    identical to the unrolled round count."""
+    dead round. Observable: the Spark jobs one call runs — a 60-round
+    budget on a diameter-3 graph runs exactly the jobs a 4-round budget
+    does. Results must be identical to the unrolled round count."""
+    sc = spark.sparkContext
+    jobs = {}
+    try:
+        for rounds in (4, 60):
+            group = f"identity-rounds-{name}-{rounds}"
+            sc.setJobGroup(group, group)
+            assert _chain_distances(spark, name, 3, rounds) == _chain_expected(name, 3)
+            jobs[rounds] = len(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setJobDescription(None)
+    assert jobs[60] == jobs[4], f"identity rounds were built: {jobs}"
+
+
+@pytest.mark.parametrize("name", _DISTANCE_FNS)
+def test_distance_loop_releases_rounds_on_deep_chain(spark, name):
+    """64 rounds on a 64-link chain: every round improves one node, so no
+    round can be skipped. Each superseded round is released, so the call
+    leaves at most the edge cut and the final round pinned, and the plan
+    never nests past one round (no StackOverflowError in serialization)."""
+
+    def _pinned():
+        jmap = spark.sparkContext._jsc.getPersistentRDDs()
+        return {int(k) for k in jmap.keySet().toArray()}
+
+    before = _pinned()
+    assert _chain_distances(spark, name, 64, 64) == _chain_expected(name, 64)
+    new_rdds = len(_pinned() - before)
+    assert new_rdds <= 2, f"superseded rounds stayed pinned: {new_rdds} new RDDs"
+
+
+def test_bellman_ford_rejects_negative_weight(spark):
     from telecom_dataengineering_pipeline_spark.operators.graph import (
         bellman_ford_distance,
     )
 
-    def _persistent_rdd_ids():
-        jmap = spark.sparkContext._jsc.getPersistentRDDs()
-        return {int(k) for k in jmap.keySet().toArray()}
-
-    # diameter 3 from the seed; frontier is empty after round 4
     df = spark.createDataFrame(
-        [(0, 1, 1), (1, 2, 1), (2, 3, 1)], "src long, dst long, w long"
+        [(0, 1, 1), (1, 2, -7), (2, 3, 1)], "src long, dst long, w long"
     )
-    before = _persistent_rdd_ids()
-    got = {
-        r["node"]: r["dist"]
-        for r in bellman_ford_distance(df, [0], rounds=60).collect()
-    }
-    new_rdds = len(_persistent_rdd_ids() - before)
-    assert got == {0: 0, 1: 1, 2: 2, 3: 3}
-    # executed rounds ≈ 4 (3 improving + 1 empty-probe) → edge + seed +
-    # ~4 merged checkpoints; 60 unrolled rounds would pin ~62
-    assert new_rdds <= 10, f"identity rounds were built: {new_rdds} new RDDs"
+    with pytest.raises(Exception, match=r"negative weight w=-7 on edge 1 -> 2"):
+        bellman_ford_distance(df, [0], rounds=3).collect()
 
 
 def test_bellman_ford_round_bound_is_exact_contract(spark):

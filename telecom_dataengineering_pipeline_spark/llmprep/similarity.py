@@ -1,15 +1,28 @@
-"""Embedding similarity search.
+"""Embedding similarity search: one core, many operators.
 
-- ``cosine_topk``: brute-force exact top-k for a bounded query set — the
-  baseline. Query side is broadcast (queries are small by construction);
-  corpus side streams through executors once; ranking is a per-query window.
-- ``sign_lsh_buckets``: random-hyperplane-style sign buckets (here: signs of
-  leading dimensions — deterministic and engine-neutral). At 100 TB this is
-  the candidate-pruning stage: join on bucket, then exact-rank candidates,
-  trading recall for a ~2^bits fan-in reduction. IVF-style coarse centroids
-  would slot in the same join shape.
+Every kNN / ANN operator here is a candidate generator plus a score, and
+all of them rank through the same few private helpers:
 
-Dot products use higher-order array functions (JVM, codegen) — no UDF.
+- generators: ``_vectors`` projects ``(vec_id, *extra, v, nrm)`` once and
+  ``_queries`` turns its query rows into ``(query_id, qv, qn, *extra)``
+  (small by construction, broadcast at its join). ``_seed_centroids`` /
+  ``_nearest_centroids`` assign IVF cells (``n=1``) or a query's
+  ``nprobe`` cells; ``_sign_bucket`` gives the sign-LSH bucket, computed in
+  the same projection as ``v``; PQ codes come from ``_nearest_codeword``.
+- scores: ``_cos`` (cosine, 6-dp rounded wherever it is compared), ``_l2sq``
+  for PQ distance tables, and Hamming over packed sign words.
+- ranking: ``_topk`` is the one ``row_number`` top-k / argmax
+  (``rank`` <= k per key, ties broken by the order columns, ``vec_id``
+  ascending last). ``_cosine_topk`` is score → rank for a
+  (query, candidate) relation; ``_cell_topk`` feeds it the vectors that
+  share a probed cell or bucket; ``_adc_topk`` ranks PQ ADC sums.
+- ``_mean_vectors`` is the one decimal-exact per-dimension mean behind
+  k-means centroids, label centroids and PQ codebooks.
+
+The candidate step is the scale lever: brute force broadcasts the queries
+against the whole corpus, buckets and cells turn that into an equi-join,
+PQ replaces raw vectors with codes. Dot products use higher-order array
+functions (JVM, codegen) — no UDF.
 """
 
 from __future__ import annotations
@@ -30,6 +43,62 @@ def _as_double(col: Column) -> Column:
     return F.transform(col, lambda x: x.cast("double"))
 
 
+def _norm(col: str) -> Column:
+    return F.sqrt(_dot(F.col(col), F.col(col)))
+
+
+def _cos(v1: str, n1: str, v2: str, n2: str) -> Column:
+    """Unrounded cosine of two vector columns given their norms."""
+    return _dot(F.col(v1), F.col(v2)) / (F.col(n1) * F.col(n2))
+
+
+def _vectors(emb: DataFrame, id_col: str, vec_col: str, *extra: Column) -> DataFrame:
+    """(vec_id, *extra, v, nrm): double vectors and their norms."""
+    return emb.select(
+        F.col(id_col).alias("vec_id"), *extra, _as_double(F.col(vec_col)).alias("v")
+    ).withColumn("nrm", _norm("v"))
+
+
+def _queries(vecs: DataFrame, ids: list[int], *extra: Column) -> DataFrame:
+    """(query_id, qv, qn, *extra): the query rows of ``_vectors`` output —
+    a few rows, broadcast at their join."""
+    return vecs.filter(F.col("vec_id").isin(ids)).select(
+        F.col("vec_id").alias("query_id"), F.col("v").alias("qv"), F.col("nrm").alias("qn"),
+        *extra,
+    )
+
+
+def _topk(df: DataFrame, key: str, k: int, *order: Column) -> DataFrame:
+    """Add ``rank`` (INT, 1-based, by ``order`` within ``key``) and keep
+    rank <= k. Spark plans it as a WindowGroupLimit: each partition prunes
+    to k rows per key before the window sort."""
+    w = Window.partitionBy(key).orderBy(*order)
+    return df.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+
+
+def _cosine_topk(cands: DataFrame, k: int) -> DataFrame:
+    """Score (query, candidate) pairs — ``qv``/``qn`` against ``v``/``nrm``
+    — by 6-dp cosine and keep each query's top k, ties to the lower id:
+    (query_id, neighbor_id, cosine, rank)."""
+    cos = F.round(_cos("qv", "qn", "v", "nrm"), 6)
+    scored = cands.select("query_id", "vec_id", cos.alias("cosine"))
+    return _topk(scored, "query_id", k, F.col("cosine").desc(), F.col("vec_id").asc()).select(
+        "query_id", F.col("vec_id").alias("neighbor_id"), "cosine", "rank"
+    )
+
+
+def _cell_topk(assigned: DataFrame, probes: DataFrame, k: int) -> DataFrame:
+    """Cosine top-k among the vectors whose ``cell`` is a query's probed
+    ``qcell``. The cell equi-join is the only shuffle of the corpus."""
+    return _cosine_topk(
+        assigned.join(
+            F.broadcast(probes),
+            (F.col("cell") == F.col("qcell")) & (F.col("vec_id") != F.col("query_id")),
+        ),
+        k,
+    )
+
+
 def cosine_topk(
     embeddings: DataFrame,
     query_ids: list[int],
@@ -38,22 +107,16 @@ def cosine_topk(
     vec_col: str = "embedding",
 ) -> DataFrame:
     """Exact top-k cosine neighbors for each query id (excluding self)."""
-    emb = embeddings.select(
-        F.col(id_col).alias("vec_id"), _as_double(F.col(vec_col)).alias("v")
-    )
-    norm = emb.withColumn("nrm", F.sqrt(_dot(F.col("v"), F.col("v"))))
-    q = norm.filter(F.col("vec_id").isin(query_ids)).select(
-        F.col("vec_id").alias("query_id"), F.col("v").alias("qv"), F.col("nrm").alias("qn")
-    )
-    joined = norm.join(F.broadcast(q), F.col("vec_id") != F.col("query_id"))
-    sim = _dot(F.col("qv"), F.col("v")) / (F.col("qn") * F.col("nrm"))
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("vec_id").asc())
-    return (
-        joined.select("query_id", "vec_id", F.round(sim, 6).alias("cosine"))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", F.col("vec_id").alias("neighbor_id"), "cosine", "rank")
-    )
+    vecs = _vectors(embeddings, id_col, vec_col)
+    q = _queries(vecs, query_ids)
+    return _cosine_topk(vecs.join(F.broadcast(q), F.col("vec_id") != F.col("query_id")), k)
+
+
+def _sign_bucket(vec_col: str, bits: int) -> Column:
+    return F.concat(*[
+        F.when(F.element_at(F.col(vec_col), i + 1) >= 0, F.lit("1")).otherwise(F.lit("0"))
+        for i in range(bits)
+    ])
 
 
 def sign_lsh_buckets(
@@ -63,12 +126,8 @@ def sign_lsh_buckets(
     vec_col: str = "embedding",
 ) -> DataFrame:
     """Assign each vector the sign-pattern bucket of its first ``bits`` dims."""
-    parts = [
-        F.when(F.element_at(F.col(vec_col), i + 1) >= 0, F.lit("1")).otherwise(F.lit("0"))
-        for i in range(bits)
-    ]
     return embeddings.select(
-        F.col(id_col).alias("vec_id"), F.concat(*parts).alias("bucket")
+        F.col(id_col).alias("vec_id"), _sign_bucket(vec_col, bits).alias("bucket")
     )
 
 
@@ -83,27 +142,24 @@ def bucketed_ann_topk(
     """Approximate top-k: candidates share the query's sign bucket; exact
     cosine ranking within the bucket. The equi-join on bucket is the only
     shuffle — this is the shape that survives a 100×-corpus scale-up."""
-    emb = embeddings.select(
-        F.col(id_col).alias("vec_id"), _as_double(F.col(vec_col)).alias("v")
+    vecs = _vectors(embeddings, id_col, vec_col, _sign_bucket(vec_col, bits).alias("cell"))
+    return _cell_topk(vecs, _queries(vecs, query_ids, F.col("cell").alias("qcell")), k)
+
+
+def _seed_centroids(vecs: DataFrame, mod: int) -> DataFrame:
+    """(cid, cv, cn): every ``mod``-th vector as a deterministic centroid."""
+    return vecs.filter(F.col("vec_id") % mod == 0).select(
+        F.col("vec_id").alias("cid"), F.col("v").alias("cv"), F.col("nrm").alias("cn")
     )
-    buckets = sign_lsh_buckets(embeddings, bits, id_col, vec_col)
-    base = emb.join(buckets, "vec_id").withColumn("nrm", F.sqrt(_dot(F.col("v"), F.col("v"))))
-    q = base.filter(F.col("vec_id").isin(query_ids)).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("v").alias("qv"),
-        F.col("nrm").alias("qn"),
-        F.col("bucket").alias("qbucket"),
-    )
-    joined = base.join(
-        F.broadcast(q), (F.col("bucket") == F.col("qbucket")) & (F.col("vec_id") != F.col("query_id"))
-    )
-    sim = _dot(F.col("qv"), F.col("v")) / (F.col("qn") * F.col("nrm"))
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("vec_id").asc())
-    return (
-        joined.select("query_id", "vec_id", F.round(sim, 6).alias("cosine"))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", F.col("vec_id").alias("neighbor_id"), "cosine", "rank")
+
+
+def _nearest_centroids(vecs: DataFrame, cents: DataFrame, n: int) -> DataFrame:
+    """The ``n`` max-cosine centroids per vector: broadcast the (tiny)
+    centroid table, score, keep the top n (ties to the lower centroid id).
+    Returns (vec_id, v, nrm, cell, c_cos)."""
+    scored = vecs.join(F.broadcast(cents)).withColumn("c_cos", _cos("v", "nrm", "cv", "cn"))
+    return _topk(scored, "vec_id", n, F.col("c_cos").desc(), F.col("cid").asc()).select(
+        "vec_id", "v", "nrm", F.col("cid").alias("cell"), "c_cos"
     )
 
 
@@ -120,20 +176,9 @@ def ivf_assign(
     The assignment is a broadcast join (centroids are tiny by construction)
     + per-vector argmax — one pass over the corpus, no shuffle of the
     corpus itself."""
-    emb = embeddings.select(
-        F.col(id_col).alias("vec_id"), _as_double(F.col(vec_col)).alias("v")
-    ).withColumn("nrm", F.sqrt(_dot(F.col("v"), F.col("v"))))
-    cents = emb.filter(F.col("vec_id") % centroid_mod == 0).select(
-        F.col("vec_id").alias("cid"), F.col("v").alias("cv"), F.col("nrm").alias("cn")
-    )
-    scored = emb.join(F.broadcast(cents)).withColumn(
-        "c_cos", _dot(F.col("v"), F.col("cv")) / (F.col("nrm") * F.col("cn"))
-    )
-    w = Window.partitionBy("vec_id").orderBy(F.col("c_cos").desc(), F.col("cid").asc())
-    return (
-        scored.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .select("vec_id", "v", "nrm", F.col("cid").alias("cell"))
+    vecs = _vectors(embeddings, id_col, vec_col)
+    return _nearest_centroids(vecs, _seed_centroids(vecs, centroid_mod), 1).select(
+        "vec_id", "v", "nrm", "cell"
     )
 
 
@@ -149,23 +194,7 @@ def ivf_topk(
     The cell equi-join is the only shuffle — same shape as the sign-LSH
     variant, but with data-adaptive cells."""
     assigned = ivf_assign(embeddings, centroid_mod, id_col, vec_col)
-    q = assigned.filter(F.col("vec_id").isin(query_ids)).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("v").alias("qv"),
-        F.col("nrm").alias("qn"),
-        F.col("cell").alias("qcell"),
-    )
-    joined = assigned.join(
-        F.broadcast(q), (F.col("cell") == F.col("qcell")) & (F.col("vec_id") != F.col("query_id"))
-    )
-    sim = _dot(F.col("qv"), F.col("v")) / (F.col("qn") * F.col("nrm"))
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("vec_id").asc())
-    return (
-        joined.select("query_id", "vec_id", F.round(sim, 6).alias("cosine"))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", F.col("vec_id").alias("neighbor_id"), "cosine", "rank")
-    )
+    return _cell_topk(assigned, _queries(assigned, query_ids, F.col("cell").alias("qcell")), k)
 
 
 def ivf_probe_cells(
@@ -177,28 +206,16 @@ def ivf_probe_cells(
     vec_col: str = "embedding",
 ) -> DataFrame:
     """The query side of multi-probe IVF: each query's top-``nprobe`` cells
-    by centroid cosine. Only |queries|×|centroids| scores are ranked — a
-    broadcast-sized relation regardless of corpus size."""
-    emb = embeddings.select(
-        F.col(id_col).alias("vec_id"), _as_double(F.col(vec_col)).alias("v")
-    ).withColumn("nrm", F.sqrt(_dot(F.col("v"), F.col("v"))))
-    cents = emb.filter(F.col("vec_id") % centroid_mod == 0).select(
-        F.col("vec_id").alias("cid"), F.col("v").alias("cv"), F.col("nrm").alias("cn")
-    )
-    q = emb.filter(F.col("vec_id").isin(query_ids))
-    scored = q.join(F.broadcast(cents)).withColumn(
-        "c_cos", _dot(F.col("v"), F.col("cv")) / (F.col("nrm") * F.col("cn"))
-    )
-    w = Window.partitionBy("vec_id").orderBy(F.col("c_cos").desc(), F.col("cid").asc())
-    return (
-        scored.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= nprobe)
-        .select(
-            F.col("vec_id").alias("query_id"),
-            F.col("v").alias("qv"),
-            F.col("nrm").alias("qn"),
-            F.col("cid").alias("probe_cell"),
-        )
+    by centroid cosine, as (query_id, qv, qn, qcell). Only
+    |queries|×|centroids| scores are ranked — a broadcast-sized relation
+    regardless of corpus size."""
+    vecs = _vectors(embeddings, id_col, vec_col)
+    q = vecs.filter(F.col("vec_id").isin(query_ids))
+    return _nearest_centroids(q, _seed_centroids(vecs, centroid_mod), nprobe).select(
+        F.col("vec_id").alias("query_id"),
+        F.col("v").alias("qv"),
+        F.col("nrm").alias("qn"),
+        F.col("cell").alias("qcell"),
     )
 
 
@@ -217,31 +234,28 @@ def ivf_topk_multiprobe(
     equi-join shape (the thing that scales) is unchanged."""
     assigned = ivf_assign(embeddings, centroid_mod, id_col, vec_col)
     probes = ivf_probe_cells(embeddings, query_ids, nprobe, centroid_mod, id_col, vec_col)
-    joined = assigned.join(
-        F.broadcast(probes),
-        (F.col("cell") == F.col("probe_cell")) & (F.col("vec_id") != F.col("query_id")),
-    )
-    sim = _dot(F.col("qv"), F.col("v")) / (F.col("qn") * F.col("nrm"))
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("vec_id").asc())
-    return (
-        joined.select("query_id", "vec_id", F.round(sim, 6).alias("cosine"))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", F.col("vec_id").alias("neighbor_id"), "cosine", "rank")
-    )
+    return _cell_topk(assigned, probes, k)
 
 
-def _nearest_centroid(emb: DataFrame, cents: DataFrame) -> DataFrame:
-    """Max-cosine centroid per vector: broadcast the (tiny) centroid table,
-    score, keep the argmax (ties to the lower centroid id)."""
-    scored = emb.join(F.broadcast(cents)).withColumn(
-        "c_cos", _dot(F.col("v"), F.col("cv")) / (F.col("nrm") * F.col("cn"))
-    )
-    w = Window.partitionBy("vec_id").orderBy(F.col("c_cos").desc(), F.col("cid").asc())
+def _mean_vectors(vecs: DataFrame, keys: list[str], vec: str, out: str) -> DataFrame:
+    """(*keys, out): the per-dimension mean of ``vec`` within each key
+    group. The update is the k-means shape — posexplode to (key, dim)
+    partial sums, map-side combined, so only keys×dims aggregate rows
+    shuffle and vectors never move. Means sum 7-dp-rounded DECIMALs, so
+    they are bit-identical on any engine and any partitioning (float
+    summation order would drift)."""
     return (
-        scored.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .select("vec_id", "v", "nrm", F.col("cid").alias("cell"), "c_cos")
+        vecs.select(*keys, F.posexplode(vec).alias("dim", "val"))
+        .groupBy(*keys, "dim")
+        .agg(
+            (
+                F.sum(F.round(F.col("val"), 7).cast("decimal(20,7)")).cast("double")
+                / F.count(F.lit(1))
+            ).alias("c")
+        )
+        .groupBy(*keys)
+        .agg(F.array_sort(F.collect_list(F.struct("dim", "c"))).alias("_dc"))
+        .select(*keys, F.transform(F.col("_dc"), lambda s: s.getField("c")).alias(out))
     )
 
 
@@ -265,34 +279,15 @@ def ivf_kmeans_assign(
     At scale this is the standard big-data k-means shape: assignments stay
     on executors, only k×dims aggregates move.
     """
-    emb = embeddings.select(
-        F.col(id_col).alias("vec_id"), _as_double(F.col(vec_col)).alias("v")
-    ).withColumn("nrm", F.sqrt(_dot(F.col("v"), F.col("v"))))
-    cents = emb.filter(F.col("vec_id") % centroid_mod == 0).select(
-        F.col("vec_id").alias("cid"), F.col("v").alias("cv"), F.col("nrm").alias("cn")
-    )
+    vecs = _vectors(embeddings, id_col, vec_col)
+    cents = _seed_centroids(vecs, centroid_mod)
     for _ in range(iters):
-        assigned = _nearest_centroid(emb, cents)
-        upd = (
-            assigned.select("cell", F.posexplode("v").alias("dim", "val"))
-            .groupBy("cell", "dim")
-            .agg(
-                (
-                    F.sum(F.round(F.col("val"), 7).cast("decimal(20,7)")).cast("double")
-                    / F.count(F.lit(1))
-                ).alias("c")
-            )
-        )
         cents = (
-            upd.groupBy("cell")
-            .agg(F.array_sort(F.collect_list(F.struct("dim", "c"))).alias("_dc"))
-            .select(
-                F.col("cell").alias("cid"),
-                F.transform(F.col("_dc"), lambda s: s.getField("c")).alias("cv"),
-            )
-            .withColumn("cn", F.sqrt(_dot(F.col("cv"), F.col("cv"))))
+            _mean_vectors(_nearest_centroids(vecs, cents, 1), ["cell"], "v", "cv")
+            .select(F.col("cell").alias("cid"), "cv")
+            .withColumn("cn", _norm("cv"))
         )
-    return _nearest_centroid(emb, cents)
+    return _nearest_centroids(vecs, cents, 1)
 
 
 def ivf_kmeans_topk(
@@ -311,23 +306,7 @@ def ivf_kmeans_topk(
     ``iters`` extra corpus passes, amortized across every query batch at
     scale (train once, search many)."""
     assigned = ivf_kmeans_assign(embeddings, centroid_mod, iters, id_col, vec_col)
-    q = assigned.filter(F.col("vec_id").isin(query_ids)).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("v").alias("qv"),
-        F.col("nrm").alias("qn"),
-        F.col("cell").alias("qcell"),
-    )
-    joined = assigned.join(
-        F.broadcast(q), (F.col("cell") == F.col("qcell")) & (F.col("vec_id") != F.col("query_id"))
-    )
-    sim = _dot(F.col("qv"), F.col("v")) / (F.col("qn") * F.col("nrm"))
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("vec_id").asc())
-    return (
-        joined.select("query_id", "vec_id", F.round(sim, 6).alias("cosine"))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", F.col("vec_id").alias("neighbor_id"), "cosine", "rank")
-    )
+    return _cell_topk(assigned, _queries(assigned, query_ids, F.col("cell").alias("qcell")), k)
 
 
 def norm_profile(
@@ -395,23 +374,7 @@ def centroid_outliers(
         F.col(id_col).alias("vec_id"),
         _as_double(F.col(vec_col)).alias("v"),
     )
-    cent = (
-        emb.select("label", F.posexplode("v").alias("dim", "val"))
-        .groupBy("label", "dim")
-        .agg(
-            (
-                F.sum(F.round(F.col("val"), 7).cast("decimal(20,7)")).cast("double")
-                / F.count(F.lit(1))
-            ).alias("c")
-        )
-        .groupBy("label")
-        .agg(F.array_sort(F.collect_list(F.struct("dim", "c"))).alias("_dc"))
-        .select(
-            "label",
-            F.transform(F.col("_dc"), lambda s: s.getField("c")).alias("cv"),
-        )
-        .withColumn("cn", F.sqrt(_dot(F.col("cv"), F.col("cv"))))
-    )
+    cent = _mean_vectors(emb, ["label"], "v", "cv").withColumn("cn", _norm("cv"))
     # Zero-norm guard: 0/0 is NaN, which sorts LAST ascending in Spark — a
     # degenerate (all-zero) vector would silently vanish from the bottom-k
     # instead of surfacing. nullif makes the cosine NULL and the explicit
@@ -421,18 +384,14 @@ def centroid_outliers(
         "vec_id",
         F.round(
             _dot(F.col("v"), F.col("cv"))
-            / F.nullif(F.sqrt(_dot(F.col("v"), F.col("v"))) * F.col("cn"), F.lit(0.0)),
+            / F.nullif(_norm("v") * F.col("cn"), F.lit(0.0)),
             6,
         ).alias("cosine_to_centroid"),
     )
-    w = Window.partitionBy("label").orderBy(
-        F.col("cosine_to_centroid").asc_nulls_first(), F.col("vec_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= bottom_k)
-        .select("label", "rank", "vec_id", "cosine_to_centroid")
-    )
+    return _topk(
+        scored, "label", bottom_k, F.col("cosine_to_centroid").asc_nulls_first(),
+        F.col("vec_id").asc(),
+    ).select("label", "rank", "vec_id", "cosine_to_centroid")
 
 
 # ---------------------------------------------------------------------------
@@ -452,6 +411,47 @@ def _l2sq(a: Column, b: Column) -> Column:
     operation a proven engine-exact fold (same expression shape as the
     DuckDB oracle: x·x − 2·x·y + y·y)."""
     return _dot(a, a) - F.lit(2.0) * _dot(a, b) + _dot(b, b)
+
+
+def _pq_codes(
+    embeddings: DataFrame, m: int, dims: int, codeword_mod: int, iters: int,
+    id_col: str, vec_col: str,
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """(sv, cbs, codes): the (vec, sub) stream, the trained codebooks and
+    the (vec_id, sub, cid) code relation — the PQ candidate side."""
+    # One materialization of the (vec, sub) stream feeds seeding, training,
+    # encode AND the query distance tables — four consumers otherwise re-run
+    # the scan + posexplode each.
+    sv = pq_subvectors(embeddings, m, dims, id_col, vec_col).transform(lineage_cut)
+    cbs = pq_codebooks(embeddings, m, dims, codeword_mod, iters, id_col, vec_col, sv=sv)
+    return sv, cbs, _nearest_codeword(sv, cbs).select("vec_id", "sub", "cid")
+
+
+def _distance_table(sv: DataFrame, cbs: DataFrame, ids: list[int]) -> DataFrame:
+    """(query_id, sub, cid, d2): every query sub-vector's squared L2 to
+    every codeword of its subspace — |queries| × m × k rows."""
+    return (
+        sv.filter(F.col("vec_id").isin(ids))
+        .select(F.col("vec_id").alias("query_id"), "sub", F.col("sv").alias("qsv"))
+        .join(F.broadcast(cbs), "sub")
+        .select("query_id", "sub", "cid", _l2sq(F.col("qsv"), F.col("cw")).alias("d2"))
+    )
+
+
+def _adc_sum(d2: Column) -> Column:
+    """Σ_sub d² as ``dist2``, summed over 7-dp DECIMALs so the ADC score
+    does not depend on partition order."""
+    return F.sum(F.round(d2, 7).cast("decimal(20,7)")).cast("double").alias("dist2")
+
+
+def _adc_topk(adc: DataFrame, k: int) -> DataFrame:
+    """(query_id, neighbor_id, adc_dist2, rank): the k smallest ADC sums."""
+    return _topk(adc, "query_id", k, F.col("dist2").asc(), F.col("vec_id").asc()).select(
+        "query_id",
+        F.col("vec_id").alias("neighbor_id"),
+        F.round(F.col("dist2"), 6).alias("adc_dist2"),
+        "rank",
+    )
 
 
 def pq_subvectors(
@@ -501,30 +501,12 @@ def pq_codebooks(
     """
     if sv is None:
         sv = pq_subvectors(embeddings, m, dims, id_col, vec_col)
-    sd = dims // m
     cbs = sv.filter(
         (F.col("vec_id") % codeword_mod == 0)
         & (F.col("vec_id") < codeword_mod * max_codewords)
     ).select("sub", F.col("vec_id").alias("cid"), F.col("sv").alias("cw"))
     for _ in range(iters):
-        assigned = _nearest_codeword(sv, cbs)
-        cbs = (
-            assigned.select("sub", "cid", F.posexplode("sv").alias("dim", "val"))
-            .groupBy("sub", "cid", "dim")
-            .agg(
-                (
-                    F.sum(F.round(F.col("val"), 7).cast("decimal(20,7)")).cast("double")
-                    / F.count(F.lit(1))
-                ).alias("c")
-            )
-            .groupBy("sub", "cid")
-            .agg(F.array_sort(F.collect_list(F.struct("dim", "c"))).alias("_dc"))
-            .select(
-                "sub",
-                "cid",
-                F.transform(F.col("_dc"), lambda s: s.getField("c")).alias("cw"),
-            )
-        )
+        cbs = _mean_vectors(_nearest_codeword(sv, cbs), ["sub", "cid"], "sv", "cw")
     # The codebook (m × k rows) feeds BOTH the corpus encode pass and the
     # per-query distance tables, under different projections — no runtime
     # exchange reuse applies, so without a cut each consumer re-runs the
@@ -563,25 +545,6 @@ def _nearest_codeword(sv: DataFrame, cbs: DataFrame) -> DataFrame:
     )
 
 
-def pq_encode(
-    embeddings: DataFrame,
-    m: int = 8,
-    dims: int = 64,
-    codeword_mod: int = 25,
-    iters: int = 1,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """(vec_id, sub, cid): the PQ-compressed corpus — ``m`` codeword ids per
-    vector. This relation (written once, grouped to an array<tinyint> per
-    vector in a real index layout) replaces the raw embedding column at
-    query time."""
-    cbs = pq_codebooks(embeddings, m, dims, codeword_mod, iters, id_col, vec_col)
-    return _nearest_codeword(
-        pq_subvectors(embeddings, m, dims, id_col, vec_col), cbs
-    ).select("vec_id", "sub", "cid")
-
-
 def pq_adc_topk(
     embeddings: DataFrame,
     query_ids: list[int],
@@ -602,43 +565,15 @@ def pq_adc_topk(
     is partition-order-exact; ranking is a WindowGroupLimit top-k. The raw
     embedding column is read only by the (amortized, train-once) codebook /
     encode passes."""
-    # One materialization of the (vec, sub) stream feeds seeding, training,
-    # encode AND the query distance tables — four consumers otherwise re-run
-    # the scan + posexplode each.
-    sv = pq_subvectors(embeddings, m, dims, id_col, vec_col).transform(lineage_cut)
-    cbs = pq_codebooks(
-        embeddings, m, dims, codeword_mod, iters, id_col, vec_col, sv=sv
-    )
-    codes = _nearest_codeword(sv, cbs).select("vec_id", "sub", "cid")
-    dt = (
-        sv.filter(F.col("vec_id").isin(query_ids))
-        .select(F.col("vec_id").alias("query_id"), "sub", F.col("sv").alias("qsv"))
-        .join(F.broadcast(cbs), "sub")
-        .select(
-            "query_id", "sub", "cid", _l2sq(F.col("qsv"), F.col("cw")).alias("d2")
-        )
-    )
+    sv, cbs, codes = _pq_codes(embeddings, m, dims, codeword_mod, iters, id_col, vec_col)
+    dt = _distance_table(sv, cbs, query_ids)
     adc = (
         codes.join(F.broadcast(dt), ["sub", "cid"])
         .filter(F.col("vec_id") != F.col("query_id"))
         .groupBy("query_id", "vec_id")
-        .agg(
-            F.sum(F.round(F.col("d2"), 7).cast("decimal(20,7)"))
-            .cast("double")
-            .alias("dist2")
-        )
+        .agg(_adc_sum(F.col("d2")))
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("dist2").asc(), F.col("vec_id").asc())
-    return (
-        adc.withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            F.round(F.col("dist2"), 6).alias("adc_dist2"),
-            "rank",
-        )
-    )
+    return _adc_topk(adc, k)
 
 
 def ivf_pq_topk(
@@ -667,23 +602,12 @@ def ivf_pq_topk(
     cells = ivf_assign(embeddings, centroid_mod, id_col, vec_col).select(
         "vec_id", "cell"
     )
-    sv = pq_subvectors(embeddings, m, dims, id_col, vec_col).transform(lineage_cut)
-    cbs = pq_codebooks(
-        embeddings, m, dims, codeword_mod, iters, id_col, vec_col, sv=sv
-    )
-    codes = (
-        _nearest_codeword(sv, cbs).select("vec_id", "sub", "cid").join(cells, "vec_id")
-    )
+    sv, cbs, codes = _pq_codes(embeddings, m, dims, codeword_mod, iters, id_col, vec_col)
+    codes = codes.join(cells, "vec_id")
     qcell = cells.filter(F.col("vec_id").isin(query_ids)).select(
         F.col("vec_id").alias("query_id"), F.col("cell").alias("qcell")
     )
-    dt = (
-        sv.filter(F.col("vec_id").isin(query_ids))
-        .select(F.col("vec_id").alias("query_id"), "sub", F.col("sv").alias("qsv"))
-        .join(F.broadcast(cbs), "sub")
-        .select("query_id", "sub", "cid", _l2sq(F.col("qsv"), F.col("cw")).alias("d2"))
-        .join(F.broadcast(qcell), "query_id")
-    )
+    dt = _distance_table(sv, cbs, query_ids).join(F.broadcast(qcell), "query_id")
     adc = (
         codes.alias("c")
         .join(
@@ -694,23 +618,9 @@ def ivf_pq_topk(
             & (F.col("c.vec_id") != F.col("t.query_id")),
         )
         .groupBy(F.col("t.query_id").alias("query_id"), F.col("c.vec_id").alias("vec_id"))
-        .agg(
-            F.sum(F.round(F.col("t.d2"), 7).cast("decimal(20,7)"))
-            .cast("double")
-            .alias("dist2")
-        )
+        .agg(_adc_sum(F.col("t.d2")))
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("dist2").asc(), F.col("vec_id").asc())
-    return (
-        adc.withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            F.round(F.col("dist2"), 6).alias("adc_dist2"),
-            "rank",
-        )
-    )
+    return _adc_topk(adc, k)
 
 
 def sq8_reconstruction_profile(
@@ -781,29 +691,19 @@ def bitext_mutual_nn(
     mutual-agreement join composes with the IVF/PQ candidate generators in
     this module instead of the exact matrix — the filter is separable from
     how candidates are produced."""
-    e = embeddings.select(
-        F.col(id_col).alias("vec_id"),
-        F.col(label_col).alias("label"),
-        _as_double(F.col(vec_col)).alias("v"),
-    ).withColumn("nrm", F.sqrt(_dot(F.col("v"), F.col("v"))))
+    e = _vectors(embeddings, id_col, vec_col, F.col(label_col).alias("label"))
     a = e.filter(F.col("label") == src_label).select(
         F.col("vec_id").alias("src_id"), F.col("v").alias("av"), F.col("nrm").alias("an")
     )
     b = e.filter(F.col("label") == tgt_label).select(
         F.col("vec_id").alias("tgt_id"), F.col("v").alias("bv"), F.col("nrm").alias("bn")
     )
-    sim = _dot(F.col("av"), F.col("bv")) / (F.col("an") * F.col("bn"))
     pairs = b.join(F.broadcast(a)).select(
-        "src_id", "tgt_id", F.round(sim, 6).alias("cosine")
+        "src_id", "tgt_id", F.round(_cos("av", "an", "bv", "bn"), 6).alias("cosine")
     )
-    fwd = Window.partitionBy("src_id").orderBy(
-        F.col("cosine").desc(), F.col("tgt_id").asc()
-    )
-    rev = Window.partitionBy("tgt_id").orderBy(
-        F.col("cosine").desc(), F.col("src_id").asc()
-    )
-    best_fwd = pairs.withColumn("r", F.row_number().over(fwd)).filter(F.col("r") == 1).drop("r")
-    best_rev = pairs.withColumn("r", F.row_number().over(rev)).filter(F.col("r") == 1).drop("r")
+    by_cos = F.col("cosine").desc()
+    best_fwd = _topk(pairs, "src_id", 1, by_cos, F.col("tgt_id").asc()).drop("rank")
+    best_rev = _topk(pairs, "tgt_id", 1, by_cos, F.col("src_id").asc()).drop("rank")
     return best_fwd.join(best_rev, ["src_id", "tgt_id", "cosine"]).select(
         "src_id", "tgt_id", "cosine"
     )
@@ -834,9 +734,7 @@ def semantic_dedup_pairs(
         embeddings, centroid_mod=centroid_mod, iters=iters, id_col=id_col, vec_col=vec_col
     ).transform(lineage_cut)  # one k-means run feeds both join sides
     left, right = a.alias("a"), a.alias("b")
-    cos = F.round(
-        _dot(F.col("a.v"), F.col("b.v")) / (F.col("a.nrm") * F.col("b.nrm")), 6
-    )
+    cos = F.round(_cos("a.v", "a.nrm", "b.v", "b.nrm"), 6)
     return (
         left.join(
             right,
@@ -873,18 +771,9 @@ def hard_negative_mining(
     WindowGroupLimit. Swap in the IVF/PQ candidate generators for the
     corpus side at scale — the mining filter (label mismatch + ceiling +
     top-k) is separable from how candidates are produced."""
-    e = embeddings.select(
-        F.col(id_col).alias("vec_id"),
-        F.col(label_col).alias("label"),
-        _as_double(F.col(vec_col)).alias("v"),
-    ).withColumn("nrm", F.sqrt(_dot(F.col("v"), F.col("v"))))
-    q = e.filter(F.col("vec_id").isin(query_ids)).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("label").alias("q_label"),
-        F.col("v").alias("qv"),
-        F.col("nrm").alias("qn"),
-    )
-    cos = F.round(_dot(F.col("qv"), F.col("v")) / (F.col("qn") * F.col("nrm")), 6)
+    e = _vectors(embeddings, id_col, vec_col, F.col(label_col).alias("label"))
+    q = _queries(e, query_ids, F.col("label").alias("q_label"))
+    cos = F.round(_cos("qv", "qn", "v", "nrm"), 6)
     scored = (
         e.join(F.broadcast(q), F.col("label") != F.col("q_label"))
         .select(
@@ -894,13 +783,7 @@ def hard_negative_mining(
         )
         .filter(F.col("cosine") < ceiling)
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("negative_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= k)
-    )
+    return _topk(scored, "query_id", k, F.col("cosine").desc(), F.col("negative_id").asc())
 
 
 def mmr_rerank(
@@ -936,15 +819,12 @@ def mmr_rerank(
     ).transform(lineage_cut)  # three+ consumers: don't re-run retrieval per round
 
     # Pairwise candidate sims within each query's pool (pool_k² per query).
-    emb = embeddings.select(
-        F.col(id_col).alias("vid"), _as_double(F.col(vec_col)).alias("v")
-    )
-    emb = emb.withColumn("nrm", F.sqrt(_dot(F.col("v"), F.col("v"))))
-    pv = pool.join(F.broadcast(emb), pool["cand_id"] == emb["vid"]).select(
+    vecs = _vectors(embeddings, id_col, vec_col)
+    pv = pool.join(F.broadcast(vecs), F.col("cand_id") == F.col("vec_id")).select(
         "query_id", "cand_id", "v", "nrm"
     )
     a, b = pv.alias("a"), pv.alias("b")
-    sim = _dot(F.col("a.v"), F.col("b.v")) / (F.col("a.nrm") * F.col("b.nrm"))
+    sim = _cos("a.v", "a.nrm", "b.v", "b.nrm")
     pairs = (
         a.join(
             b,
@@ -994,18 +874,11 @@ def mmr_rerank(
             "score",
             lam_d * rel_d - one_m * F.col("max_sim").cast("decimal(8,6)"),
         )
-        w = Window.partitionBy("query_id").orderBy(
-            F.col("score").desc(), F.col("cand_id").asc()
-        )
-        pick = (
-            scored.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .select(
-                "query_id",
-                F.col("cand_id").alias("selected_id"),
-                F.lit(r).alias("round"),
-                F.col("score").cast("double").alias("mmr_score"),
-            )
+        pick = _topk(scored, "query_id", 1, F.col("score").desc(), F.col("cand_id").asc()).select(
+            "query_id",
+            F.col("cand_id").alias("selected_id"),
+            F.lit(r).alias("round"),
+            F.col("score").cast("double").alias("mmr_score"),
         )
         out = out.unionByName(pick)
     return out
@@ -1155,12 +1028,7 @@ def hamming_topk(
         F.col(id_col).alias("neighbor_id"),
         dist.cast("int").alias("hamming"),
     )
-    wnd = Window.partitionBy("query_id").orderBy(
-        F.col("hamming").asc(), F.col("neighbor_id").asc()
-    )
-    return scored.withColumn(
-        "rank", F.row_number().over(wnd).cast("int")
-    ).filter(F.col("rank") <= int(k))
+    return _topk(scored, "query_id", int(k), F.col("hamming").asc(), F.col("neighbor_id").asc())
 
 
 def truncation_recall_profile(
@@ -1374,9 +1242,7 @@ def semdedup_cell_prune(
         F.col("nrm").alias("_ln"),
         F.col("cell").alias("_lcell"),
     )
-    cos = F.round(
-        _dot(F.col("v"), F.col("_lv")) / (F.col("nrm") * F.col("_ln")), 6
-    )
+    cos = F.round(_cos("v", "nrm", "_lv", "_ln"), 6)
     pairs = assigned.join(
         lower,
         (F.col("cell") == F.col("_lcell")) & (F.col("_lid") < F.col("vec_id")),
@@ -1431,13 +1297,12 @@ def knn_label_agreement(
         F.col("nrm").alias("_on"),
         F.col("cell").alias("_ocell"),
     )
-    cos = F.round(_dot(F.col("v"), F.col("_ov")) / (F.col("nrm") * F.col("_on")), 6)
+    cos = F.round(_cos("v", "nrm", "_ov", "_on"), 6)
     pairs = assigned.join(
         other,
         (F.col("cell") == F.col("_ocell")) & (F.col("_oid") != F.col("vec_id")),
     ).select("vec_id", F.col("_oid"), cos.alias("_cos"))
-    w = Window.partitionBy("vec_id").orderBy(F.col("_cos").desc(), F.col("_oid").asc())
-    topk = pairs.withColumn("_rn", F.row_number().over(w)).filter(F.col("_rn") <= k)
+    topk = _topk(pairs, "vec_id", k, F.col("_cos").desc(), F.col("_oid").asc())
     nb = (
         topk.join(labels.withColumnRenamed("vec_id", "_oid").withColumnRenamed(
             "label", "_olabel"), "_oid")

@@ -284,9 +284,7 @@ SELECT query_id, vec_id AS neighbor_id, cosine, rank FROM r WHERE rank <= 5
 @register("knn_cosine_bruteforce", oracle=_KNN_ORACLE, tags=("LLM", "similarity"), bench=True)
 def knn_cosine_bruteforce_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
-    return cosine_topk(emb, query_ids=list(range(10)), k=5).withColumn(
-        "rank", F.col("rank").cast("int")
-    )
+    return cosine_topk(emb, query_ids=list(range(10)), k=5)
 
 
 _BUCKET_ORACLE = """
@@ -334,9 +332,7 @@ SELECT query_id, vec_id AS neighbor_id, cosine, rank FROM r WHERE rank <= 5
 @register("ann_bucketed_topk", oracle=_ANN_ORACLE, tags=("LLM", "similarity"))
 def ann_bucketed_topk_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
-    return bucketed_ann_topk(emb, query_ids=list(range(10)), k=5, bits=8).withColumn(
-        "rank", F.col("rank").cast("int")
-    )
+    return bucketed_ann_topk(emb, query_ids=list(range(10)), k=5, bits=8)
 
 
 # ---------------------------------------------------------------------------
@@ -407,9 +403,7 @@ def ann_ivf_topk_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..llmprep.similarity import ivf_topk
 
     emb = load_table(spark, sf_dir, "embeddings")
-    return ivf_topk(emb, query_ids=list(range(10)), k=5, centroid_mod=100).withColumn(
-        "rank", F.col("rank").cast("int")
-    )
+    return ivf_topk(emb, query_ids=list(range(10)), k=5, centroid_mod=100)
 
 
 # ---------------------------------------------------------------------------
@@ -704,9 +698,7 @@ def ann_ivf_nprobe_topk_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..llmprep.similarity import ivf_topk_multiprobe
 
     emb = load_table(spark, sf_dir, "embeddings")
-    return ivf_topk_multiprobe(
-        emb, query_ids=list(range(10)), k=5, centroid_mod=100, nprobe=2
-    ).withColumn("rank", F.col("rank").cast("int"))
+    return ivf_topk_multiprobe(emb, query_ids=list(range(10)), k=5, centroid_mod=100, nprobe=2)
 
 
 # ---------------------------------------------------------------------------

@@ -788,6 +788,28 @@ def test_sssp_edges_lineage_cut(spark, sf_smoke, monkeypatch):
     assert captured["plan"].count("FileScan") == 0
 
 
+def test_bucketed_ann_buckets_in_vector_projection(spark, sf_smoke):
+    """The sign bucket is computed in the same projection as the vector:
+    one scan per join side and the bucket equi-join as the only join —
+    no self-join of the bucket relation back onto the embeddings."""
+    plan = _physical(spark, "ann_bucketed_topk", sf_smoke)
+    assert plan.count("FileScan parquet") == 2
+    assert plan.count("BroadcastHashJoin") == 1
+
+
+def test_plan_dump_is_stable_within_a_session(spark, sf_smoke):
+    """Two dumps of the same query in one session are byte-identical once
+    expression ids, plan ids and lambda variable names are masked — the
+    property that lets a diff of two dump directories show only real plan
+    changes."""
+    from telecom_dataengineering_pipeline_spark.plan_dump import dump
+
+    fn = REGISTRY["knn_cosine_bruteforce"].fn
+    first = dump(spark, fn, sf_smoke)
+    assert "== Physical Plan ==" in first and "#" in first
+    assert dump(spark, fn, sf_smoke) == first
+
+
 # Queries whose plan carries a BroadcastNestedLoopJoin because a SCALAR or
 # bounded broadcast frame crossJoins onto the relation BY CONSTRUCTION (a
 # one-row totals/cutoff/count anchor, the broadcast k-query set of an ANN

@@ -209,23 +209,18 @@ def test_driver_window_refreshes_stalest_evidence():
     assert len(never_in_window) <= 30
 
 
-def test_pq_encode_shape_and_self_distance(spark):
-    """Every vector gets exactly m codes; a vector that IS a codeword seed
-    reconstructs its own subspaces well enough that its ADC self-distance
-    ranks it nearest to an identical twin."""
+def test_pq_adc_twin_rank_and_bad_m(spark):
+    """A vector that IS a codeword seed reconstructs its own subspaces well
+    enough that its ADC self-distance ranks it nearest to an identical
+    twin; a subspace count that does not divide the width is refused."""
     from telecom_dataengineering_pipeline_spark.llmprep.similarity import (
         pq_adc_topk,
-        pq_encode,
         pq_subvectors,
     )
 
     base = [float(i % 7) - 3.0 for i in range(16)]
     rows = [(0, base), (1, base), (2, [v + 5.0 for v in base]), (25, [v - 2.0 for v in base])]
     emb = spark.createDataFrame(rows, "vec_id LONG, embedding ARRAY<DOUBLE>")
-
-    codes = pq_encode(emb, m=4, dims=16, codeword_mod=25, iters=1)
-    per_vec = codes.groupBy("vec_id").count().collect()
-    assert all(r["count"] == 4 for r in per_vec) and len(per_vec) == 4
 
     out = pq_adc_topk(emb, query_ids=[0], k=3, m=4, dims=16, codeword_mod=25, iters=1)
     top = {r["rank"]: r for r in out.collect()}

@@ -1,7 +1,7 @@
 """Cluster-scale lineage-cut policy (one config point for every cut site).
 
 Every cut site in the engine routes through :func:`lineage_cut` (lazy) or
-:func:`lineage_cut_eager` (eager, for loops that probe each round), so one
+:func:`lineage_cut_eager` (eager, for a cut an action reads at once), so one
 session conf swaps the mechanism fleet-wide. Both modes truncate the logical
 plan, which is what keeps iterative plans linear in the round count.
 
@@ -19,20 +19,34 @@ plan, which is what keeps iterative plans linear in the round count.
 
 Release contract: :func:`release` frees whatever backs a DataFrame returned
 by ``lineage_cut``/``lineage_cut_eager`` — the pinned blocks of a local
-checkpoint, the ``rdd-<id>`` directory of a reliable one. Loops call it on
-each superseded round's cut, once nothing still to be computed reads it.
+checkpoint, the ``rdd-<id>`` directory of a reliable one.
+
+Fixed points: every round-cutting loop runs on :func:`iterate`, which owns
+the cut cadence and the release. Each round's state is cut lazily, which
+keeps the plan linear in the round count even when a round reads its state
+twice (LPA, k-core). Lazy cuts still chain: materializing round r computes
+every unmaterialized round before it in one job, and a 64-round lazy chain
+overflowed the task-serialization stack (``StackOverflowError``; 48 rounds
+passed). So every ``EAGER_EVERY`` (16) rounds the cut is eager, and that
+cut releases every earlier cut of the loop, ``start`` included when it is
+a cut: at most ``EAGER_EVERY`` rounds stay pinned. A loop that probes its
+state with an action (``until``) cuts every round eagerly — a lazy cut an
+action has touched may hold only some partitions — and so keeps at most
+the round it probed and the one before.
 """
 
 from __future__ import annotations
 
 import os
 import tempfile
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame
 
 _MODE_CONF = "spark.graft.lineage_cut"
 _DIR_CONF = "spark.graft.checkpoint_dir"
 _VALID = ("localCheckpoint", "checkpoint")
+EAGER_EVERY = 16
 
 
 def _mode(df: DataFrame) -> str:
@@ -89,3 +103,44 @@ def release(cut: DataFrame) -> None:
         sc = cut.sparkSession.sparkContext
         path = sc._jvm.org.apache.hadoop.fs.Path(f.get())
         path.getFileSystem(sc._jsc.hadoopConfiguration()).delete(path, True)
+
+
+def _is_cut(df: DataFrame) -> bool:
+    plan = df._jdf.logicalPlan()
+    return (
+        plan.getClass().getSimpleName() == "LogicalRDD"
+        and plan.rdd().checkpointData().isDefined()
+    )
+
+
+def iterate(
+    start: DataFrame,
+    step: Callable[[DataFrame], DataFrame],
+    rounds: int,
+    until: Callable[[DataFrame, DataFrame], bool] | None = None,
+) -> DataFrame:
+    """Run ``state = step(state)`` from ``start`` for at most ``rounds``
+    rounds and return the last state, a cut (``start`` itself when
+    ``rounds`` is 0). ``step`` builds one round's relation from the previous
+    state only; anything else it reads must be loop-invariant.
+
+    Each round's state is cut lazily, and eagerly every ``EAGER_EVERY``
+    rounds; an eager cut releases every cut the loop made before it, and
+    ``start`` if it is a cut. With ``until(prev, state)`` every round is
+    cut eagerly and probed after its cut, before ``prev`` is released; the
+    loop stops at the first true probe."""
+    held = [start] if _is_cut(start) else []
+    state = start
+    for r in range(1, rounds + 1):
+        prev = state
+        eager = until is not None or r % EAGER_EVERY == 0
+        state = lineage_cut(step(prev), eager=eager)
+        done = until is not None and until(prev, state)
+        if eager:
+            for cut in held:
+                release(cut)
+            held = []
+        held.append(state)
+        if done:
+            break
+    return state

@@ -38,7 +38,7 @@ from .text import normalized_fingerprint, token_hash32, tokens
 import sys as _sys
 
 from pyspark import cloudpickle as _cp
-from ..lineage import lineage_cut, lineage_cut_eager, release
+from ..lineage import iterate, lineage_cut
 
 _cp.register_pickle_by_value(_sys.modules[__name__])
 
@@ -961,9 +961,10 @@ def connected_dup_groups(pairs: DataFrame, max_iters: int = 25) -> DataFrame:
     its closed neighborhood; small-star: every node folds its smaller
     neighbors (and itself) onto that minimum. Both are one groupBy + one
     equi-join; each round's edge set is keyed by node — no all-pairs step
-    anywhere. Each round's edge relation is cut eagerly and the superseded
-    one released, so storage stays constant in the round count. Only the
-    per-round "any label changed" probe reaches the driver.
+    anywhere. Rounds run on ``lineage.iterate`` with the "labels unchanged"
+    probe, so each round's edge relation is cut eagerly and the superseded
+    one released after the probe that reads it: storage stays constant in
+    the round count. Only the probe's answer reaches the driver.
 
     Returns (doc_id, group_id) where group_id is the component's minimum
     doc id. Raises ``RuntimeError`` if labels still change after
@@ -993,9 +994,7 @@ def connected_dup_groups(pairs: DataFrame, max_iters: int = 25) -> DataFrame:
             mins.withColumnRenamed("a", "doc_id"), "doc_id", "left"
         ).select("doc_id", F.coalesce("_lbl", "doc_id").alias("label"))
 
-    prev_labels = _labels(e)
-    for _ in range(max_iters):
-        src = e
+    def star(e: DataFrame) -> DataFrame:
         # large-star over both edge directions
         both = e.union(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
         mins = both.groupBy("a").agg(F.min("b").alias("mn"))
@@ -1009,28 +1008,31 @@ def connected_dup_groups(pairs: DataFrame, max_iters: int = 25) -> DataFrame:
         # small-star over the (a > b)-directed edges
         mins = e.groupBy("a").agg(F.min("b").alias("mn"))
         j = e.join(mins, "a")
-        e = (
+        return (
             j.filter(F.col("b") != F.col("mn"))
             .select(F.col("b").alias("a"), F.col("mn").alias("b"))
             .union(mins.select("a", F.col("mn").alias("b")))
             .filter(F.col("a") != F.col("b"))
             .distinct()
-            .transform(lineage_cut_eager)
         )
-        labels = _labels(e)
-        done = (
-            labels.join(prev_labels.withColumnRenamed("label", "_old"), "doc_id")
+
+    probes: list[bool] = []
+
+    def unchanged(prev: DataFrame, e: DataFrame) -> bool:
+        probes.append(
+            _labels(e)
+            .join(_labels(prev).withColumnRenamed("label", "_old"), "doc_id")
             .filter(F.col("label") != F.col("_old"))
             .isEmpty()
         )
-        # prev_labels (the last reader of src) is spent: free src's round.
-        release(src)
-        if done:
-            return labels.select("doc_id", F.col("label").alias("group_id"))
-        prev_labels = labels
-    raise RuntimeError(
-        f"connected_dup_groups: labels still changing after max_iters={max_iters} rounds"
-    )
+        return probes[-1]
+
+    e = iterate(e, star, max_iters, unchanged)
+    if not (probes and probes[-1]):
+        raise RuntimeError(
+            f"connected_dup_groups: labels still changing after max_iters={max_iters} rounds"
+        )
+    return _labels(e).select("doc_id", F.col("label").alias("group_id"))
 
 
 def dup_ngram_stats(

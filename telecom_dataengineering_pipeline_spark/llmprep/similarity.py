@@ -30,7 +30,7 @@ from __future__ import annotations
 from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
-from ..lineage import lineage_cut
+from ..lineage import iterate, lineage_cut
 
 
 def _dot(a: Column, b: Column) -> Column:
@@ -277,16 +277,19 @@ def ivf_kmeans_assign(
     centroids — and therefore the final assignment — are bit-identical on
     any engine and any partitioning (float summation order would drift).
     At scale this is the standard big-data k-means shape: assignments stay
-    on executors, only k×dims aggregates move.
+    on executors, only k×dims aggregates move. Rounds run on
+    ``lineage.iterate``, so each round's centroids are a cut.
     """
     vecs = _vectors(embeddings, id_col, vec_col)
-    cents = _seed_centroids(vecs, centroid_mod)
-    for _ in range(iters):
-        cents = (
+
+    def lloyd(cents: DataFrame) -> DataFrame:
+        return (
             _mean_vectors(_nearest_centroids(vecs, cents, 1), ["cell"], "v", "cv")
             .select(F.col("cell").alias("cid"), "cv")
             .withColumn("cn", _norm("cv"))
         )
+
+    cents = iterate(_seed_centroids(vecs, centroid_mod), lloyd, iters)
     return _nearest_centroids(vecs, cents, 1)
 
 
@@ -498,6 +501,10 @@ def pq_codebooks(
     m × k × sub_dims aggregate rows shuffle, never vectors. Means sum
     7-dp-rounded DECIMALs (order-independent), so codebooks — and every
     downstream code — are bit-identical on any engine or partitioning.
+    Rounds run on ``lineage.iterate``, whose last-round cut is the
+    codebook both the encode pass and the query distance tables read (no
+    exchange reuse spans their projections), so neither re-runs the Lloyd
+    chain and its corpus-sized assignment aggregate.
     """
     if sv is None:
         sv = pq_subvectors(embeddings, m, dims, id_col, vec_col)
@@ -505,14 +512,9 @@ def pq_codebooks(
         (F.col("vec_id") % codeword_mod == 0)
         & (F.col("vec_id") < codeword_mod * max_codewords)
     ).select("sub", F.col("vec_id").alias("cid"), F.col("sv").alias("cw"))
-    for _ in range(iters):
-        cbs = _mean_vectors(_nearest_codeword(sv, cbs), ["sub", "cid"], "sv", "cw")
-    # The codebook (m × k rows) feeds BOTH the corpus encode pass and the
-    # per-query distance tables, under different projections — no runtime
-    # exchange reuse applies, so without a cut each consumer re-runs the
-    # whole Lloyd chain INCLUDING its corpus-sized assignment aggregate.
-    # Materializing m × k tiny rows once is free by comparison.
-    return cbs.transform(lineage_cut)
+    return iterate(
+        cbs, lambda c: _mean_vectors(_nearest_codeword(sv, c), ["sub", "cid"], "sv", "cw"), iters
+    )
 
 
 def _nearest_codeword(sv: DataFrame, cbs: DataFrame) -> DataFrame:

@@ -1,7 +1,9 @@
 """Iterative graph analytics: fixed-point PageRank, centrality, and
 bounded distances on ONE frontier-relaxation loop (:func:`_relax`, shared
-by BFS, closeness and Bellman–Ford) that cuts each round eagerly and frees
-the round it supersedes with ``lineage.release``.
+by BFS, closeness and Bellman–Ford). Every loop here except PageRank and
+betweenness is a step function run by ``lineage.iterate``, which cuts each
+round's state and releases the rounds it supersedes; PageRank cuts no
+round, and betweenness keeps every level for its backward pass.
 
 Complements the connected-components tier (``llmprep/dedup.py``
 large-star/small-star) with the other workhorse graph primitives.
@@ -29,7 +31,7 @@ from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-from ..lineage import lineage_cut, lineage_cut_eager, release
+from ..lineage import iterate, lineage_cut
 
 
 def parity_encode(key, odd: bool):
@@ -217,7 +219,9 @@ def label_propagation(edges: DataFrame, iters: int = 5) -> DataFrame:
     after ``iters`` rounds. Per round: one edge⋈label join (shuffle on
     node id) + one (node, label) count + one per-node argmax — all
     map-side-combinable; label state is one row per node, never adjacency-
-    sized. Iterations unroll into one lazy plan like the PageRank loop.
+    sized. Rounds run on ``lineage.iterate``: each round's labels are a
+    cut, so the plan stays linear in rounds although a round reads its
+    labels twice (edge join + self-vote union).
     """
     if iters < 1:
         raise ValueError("label propagation needs at least one iteration")
@@ -226,8 +230,8 @@ def label_propagation(edges: DataFrame, iters: int = 5) -> DataFrame:
         e.select(F.col("v").alias("u"), F.col("u").alias("v"))
     ).transform(lineage_cut)
     nodes = both.select(F.col("u").alias("node")).distinct().transform(lineage_cut)
-    labels = nodes.select("node", F.col("node").alias("label"))
-    for _ in range(iters):
+
+    def vote(labels: DataFrame) -> DataFrame:
         # Each node's own current label joins the vote (weight 1): the
         # self-vote damps the 2-cycle oscillation synchronous LPA exhibits
         # on bipartite structure (x and y endlessly swapping labels) while
@@ -243,54 +247,47 @@ def label_propagation(edges: DataFrame, iters: int = 5) -> DataFrame:
         winner = votes.groupBy("n").agg(
             F.min(F.struct((-F.col("c")).alias("nc"), F.col("label"))).alias("w")
         )
-        # Each round references `labels` twice (edge join + self-vote
-        # union): the lazy checkpoint keeps the unrolled plan linear in
-        # rounds instead of doubling per round (same discipline as
-        # k_core; at 2 rounds it is cosmetic, at 10 it is the difference
-        # between a plan and a 2^10 analysis blowup).
-        labels = nodes.join(winner, nodes["node"] == winner["n"], "left").select(
+        return nodes.join(winner, nodes["node"] == winner["n"], "left").select(
             "node", F.coalesce(F.col("w.label"), F.col("node")).alias("label")
-        ).transform(lineage_cut)
-    return labels
+        )
+
+    return iterate(nodes.select("node", F.col("node").alias("label")), vote, iters)
 
 
 def k_core(edges: DataFrame, k: int, rounds: int = 10) -> DataFrame:
     """Nodes of the k-core (maximal subgraph where every node has degree
     ≥ k) by synchronous peeling: each round drops nodes whose degree in
     the SURVIVING subgraph is < k, together with their edges. Peeling is
-    monotone (the survivor set only shrinks), so a fixed ``rounds``
-    unrolls into one lazy plan like the PageRank/LPA loops — each round
-    is one map-side-combined degree count + two semi-joins, nothing
-    collects. ``rounds`` bounds the cascade depth; on fixture graphs the
-    set stabilizes in a handful of rounds (tests pin convergence), and a
-    production caller sizes it like an iteration budget.
+    monotone (the survivor set only shrinks), so a fixed ``rounds`` runs
+    on ``lineage.iterate`` like the LPA loop — each round is one
+    map-side-combined degree count + two semi-joins, nothing collects, and
+    each round's surviving edges are a cut (a round reads them twice, so
+    an uncut plan would double per round). ``rounds`` bounds the cascade
+    depth; on fixture graphs the set stabilizes in a handful of rounds
+    (tests pin convergence), and a production caller sizes it like an
+    iteration budget.
 
     ``edges``: undirected distinct pairs (u, v). Returns (node,) rows.
     """
     if k < 1:
         raise ValueError("k-core needs k >= 1")
     e = edges.select("u", "v")
-    surviving = e.unionAll(
+    both = e.unionAll(
         e.select(F.col("v").alias("u"), F.col("u").alias("v"))
     ).transform(lineage_cut)
-    for _ in range(rounds):
+
+    def peel(surviving: DataFrame) -> DataFrame:
         deg = (
             surviving.groupBy("u")
             .agg(F.count(F.lit(1)).alias("d"))
             .filter(F.col("d") >= k)
             .select("u")
         )
-        # Each round references `surviving` twice (degree side + join
-        # side): without a lineage cut the logical plan DOUBLES per round
-        # — 2^rounds analysis blowup. The lazy checkpoint makes each
-        # round's plan reference the previous round once, keeping plan
-        # size (and Catalyst time) linear in rounds, same discipline as
-        # the PageRank/LPA loops.
-        surviving = (
-            surviving.join(deg, "u", "left_semi")
-            .join(deg.select(F.col("u").alias("v")), "v", "left_semi")
-            .transform(lineage_cut)
+        return surviving.join(deg, "u", "left_semi").join(
+            deg.select(F.col("u").alias("v")), "v", "left_semi"
         )
+
+    surviving = iterate(both, peel, rounds)
     return surviving.select(F.col("u").alias("node")).distinct()
 
 
@@ -460,7 +457,8 @@ def personalized_pagerank(
     sparse ranks plus one map-side-combined sum, and nodes outside the
     i-hop neighborhood never enter the shuffle at iteration i. The seed
     set is a query parameter (human-sized); it broadcasts as a literal
-    IN filter.
+    IN filter. Iterations run on ``lineage.iterate``, which cuts each
+    round's ranks.
 
     Returns (node, rank_fp) for nodes with rank > 0 (the reachable set),
     rank in units of ``scale``."""
@@ -481,11 +479,11 @@ def personalized_pagerank(
         .distinct()
         .transform(lineage_cut)
     )
-    is_seed = F.col("node").isin(sources)
-    rank = nodes.filter(is_seed).select(
-        "node", F.lit(teleport).cast("long").alias("rank_fp")
+    base = nodes.filter(F.col("node").isin(sources)).select(
+        "node", F.lit(teleport).cast("long").alias("t")
     )
-    for _ in range(iters):
+
+    def walk(rank: DataFrame) -> DataFrame:
         inflow = (
             ed.join(rank, ed["src"] == rank["node"])
             .select(
@@ -495,10 +493,7 @@ def personalized_pagerank(
             .groupBy("node")
             .agg(F.sum("c").cast("long").alias("s"))
         )
-        base = nodes.filter(is_seed).select(
-            "node", F.lit(teleport).cast("long").alias("t")
-        )
-        rank = (
+        return (
             base.join(inflow, "node", "full")
             .select(
                 "node",
@@ -507,9 +502,10 @@ def personalized_pagerank(
                 .alias("rank_fp"),
             )
             .filter(F.col("rank_fp") > 0)
-            .transform(lineage_cut)
         )
-    return rank
+
+    # round 0: the teleport mass on every seed
+    return iterate(base.withColumnRenamed("t", "rank_fp"), walk, iters)
 
 
 def hits_scores(
@@ -542,7 +538,10 @@ def hits_scores(
     score vector plus one map-side-combined sum; the normalizing max is
     a metadata-sized 1-row broadcast. Scores stay SPARSE — only nodes
     with in-links carry authority rows, only nodes with out-links carry
-    hub rows; a full dense vector never materializes.
+    hub rows; a full dense vector never materializes. The half-steps run
+    on ``lineage.iterate`` (2·iters − 1 of them, ending on authorities),
+    which cuts each one; the final hub half-step is cut on its own, since
+    the result reads it together with the last authorities.
 
     Returns (node, hub_fp, auth_fp) — full outer of the two sparse
     vectors, missing side as 0 — after ``iters`` rounds from uniform
@@ -551,13 +550,24 @@ def hits_scores(
         raise ValueError("hits_scores needs at least one iteration")
     edges = edges.select("src", "dst").transform(lineage_cut)
 
-    def _normalize(df: DataFrame, col: str) -> DataFrame:
-        mx = df.agg(F.max(col).alias("_mx"))
+    def half(v: DataFrame) -> DataFrame:
+        """Hubs → authorities or authorities → hubs, by ``v``'s score column:
+        out(to) = Σ v(at) over the edges at → to, then normalized."""
+        x, at, to, out = (
+            ("hub_fp", "src", "dst", "auth_fp")
+            if "hub_fp" in v.columns
+            else ("auth_fp", "dst", "src", "hub_fp")
+        )
+        s = (
+            edges.join(v, edges[at] == v["node"])
+            .select(F.col(to).alias("node"), F.col(x).alias("c"))
+            .groupBy("node")
+            .agg(F.sum("c").cast("long").alias(out))
+        )
+        mx = s.agg(F.max(out).alias("_mx"))
         k = f"((_mx + CAST({scale - 1} AS BIGINT)) div CAST({scale} AS BIGINT))"
-        return (
-            df.crossJoin(F.broadcast(mx))
-            .select("node", F.expr(f"{col} div {k}").alias(col))
-            .transform(lineage_cut)
+        return s.crossJoin(F.broadcast(mx)).select(
+            "node", F.expr(f"{out} div {k}").alias(out)
         )
 
     hub = (
@@ -566,22 +576,8 @@ def hits_scores(
         .select("node", F.lit(int(scale)).cast("long").alias("hub_fp"))
         .transform(lineage_cut)
     )
-    auth: DataFrame | None = None
-    for _ in range(iters):
-        auth = _normalize(
-            edges.join(hub, edges["src"] == hub["node"])
-            .select(F.col("dst").alias("node"), F.col("hub_fp").alias("c"))
-            .groupBy("node")
-            .agg(F.sum("c").cast("long").alias("auth_fp")),
-            "auth_fp",
-        )
-        hub = _normalize(
-            edges.join(auth, edges["dst"] == auth["node"])
-            .select(F.col("src").alias("node"), F.col("auth_fp").alias("c"))
-            .groupBy("node")
-            .agg(F.sum("c").cast("long").alias("hub_fp")),
-            "hub_fp",
-        )
+    auth = iterate(hub, half, 2 * iters - 1)
+    hub = half(auth).transform(lineage_cut)
     return (
         hub.join(auth, "node", "full")
         .select(
@@ -601,41 +597,43 @@ def _unit_edges(edges: DataFrame) -> DataFrame:
     )
 
 
-def _seeds(e: DataFrame, sources: list, keys: list[str]) -> DataFrame:
-    """Round 0 of :func:`_relax`, cut: each seed that is a node of ``e``
-    (distance is defined on the graph) at distance 0, under every key."""
-    nodes = e.select(F.col("src").alias("node")).unionAll(
-        e.select(F.col("dst").alias("node"))
-    )
-    return (
-        nodes.filter(F.col("node").isin(sources))
-        .distinct()
-        .select(
-            *(F.col("node").alias(k) for k in keys), F.lit(0).cast("long").alias("dist")
-        )
-        .transform(lineage_cut)
-    )
-
-
-def _relax(e: DataFrame, start: DataFrame, keys: list[str], rounds: int) -> DataFrame:
+def _relax(e: DataFrame, sources: list, keys: list[str], rounds: int) -> DataFrame:
     """The frontier-relaxation loop under :func:`bfs_hop_distance`,
     :func:`closeness_centrality` and :func:`bellman_ford_distance`. ``e``
-    is (src, dst, w), ``w`` integral and non-negative; ``start`` is a
-    lineage cut of (*keys, dist), ``keys`` ``["node"]`` or ``["seed",
-    "node"]``. Returns (*keys, dist): the shortest distance per key using
-    at most ``rounds`` edges.
+    is (src, dst, w), ``w`` integral and non-negative; ``keys`` is
+    ``["node"]`` or ``["seed", "node"]``. Returns (*keys, dist): the
+    shortest distance per key using at most ``rounds`` edges from the
+    ``sources`` that are nodes of ``e`` (distance is defined on the graph).
 
-    SPFA-style: round r relaxes OUT of the keys improved in round r−1 only
-    (provably equal to full per-round relaxation: every shortest ≤r-edge
-    path improves through an improved prefix), so settled regions leave
-    the shuffle early. Each round's merged relation is cut EAGERLY before
-    the round it supersedes (round 1: ``start``) is released — the old
-    round must stay readable until the new cut is complete, and a lazy cut
-    probed by ``isEmpty`` may hold only some partitions."""
-    dist = frontier = prev = start
-    for _ in range(rounds):
+    A round's state is the merged relation (*keys, _old, _new): the
+    distance before the round and the round's best candidate. Both the
+    distance relation (least of the two — ≡ the union + min-regroup it
+    replaces, since the keys are unique on both sides) and the improved
+    frontier are projections of it, so each round pays one join exchange
+    + one cut. SPFA-style: round r relaxes OUT of the keys improved in
+    round r−1 only (provably equal to full per-round relaxation: every
+    shortest ≤r-edge path improves through an improved prefix), so
+    settled regions leave the shuffle early.
+
+    Identity-round collapse: once the frontier is empty every remaining
+    round is a provable no-op — cand is empty, the full outer join returns
+    exactly dist's rows with _new NULL, and least(_old, NULL) = _old — so
+    ``lineage.iterate`` stops at the first empty frontier (the result is
+    the SAME relation the unrolled rounds produce, so the fixed-round
+    oracle contract holds)."""
+
+    def dist(m: DataFrame) -> DataFrame:
+        return m.select(*keys, F.least("_old", "_new").alias("dist"))
+
+    def frontier(m: DataFrame) -> DataFrame:
+        return m.filter(
+            F.col("_old").isNull() | (F.col("_new") < F.col("_old"))
+        ).select(*keys, F.col("_new").alias("dist"))
+
+    def relax(m: DataFrame) -> DataFrame:
+        f = frontier(m)
         cand = (
-            e.join(frontier, e["src"] == frontier["node"])
+            e.join(f, e["src"] == f["node"])
             .select(
                 *keys[:-1],
                 F.col("dst").alias("node"),
@@ -644,31 +642,27 @@ def _relax(e: DataFrame, start: DataFrame, keys: list[str], rounds: int) -> Data
             .groupBy(*keys)
             .agg(F.min("dist").alias("dist"))
         )
-        # One full-outer join merges the round: both the updated distance
-        # relation (least of old/candidate — ≡ the union + min-regroup it
-        # replaces, since the keys are unique on both sides) and the
-        # improved frontier are projections of the SAME merged relation, so
-        # each round pays one join exchange + one checkpoint.
-        merged = (
-            dist.select(*keys, F.col("dist").alias("_old"))
+        return (
+            dist(m)
+            .select(*keys, F.col("dist").alias("_old"))
             .join(cand.select(*keys, F.col("dist").alias("_new")), keys, "full")
-            .transform(lineage_cut_eager)
         )
-        release(prev)
-        prev = merged
-        dist = merged.select(*keys, F.least("_old", "_new").alias("dist"))
-        frontier = merged.filter(
-            F.col("_old").isNull() | (F.col("_new") < F.col("_old"))
-        ).select(*keys, F.col("_new").alias("dist"))
-        # Identity-round collapse: once the frontier is empty every
-        # remaining round is a provable no-op — cand is empty, the full
-        # outer join returns exactly dist's rows with _new NULL, and
-        # least(_old, NULL) = _old — so skip building the dead rounds (the
-        # result is the SAME relation the unrolled rounds produce, so the
-        # fixed-round oracle contract holds).
-        if frontier.isEmpty():
-            break
-    return dist
+
+    nodes = e.select(F.col("src").alias("node")).unionAll(
+        e.select(F.col("dst").alias("node"))
+    )
+    # Round 0, cut: every seed under every key, its one candidate distance 0.
+    start = (
+        nodes.filter(F.col("node").isin(sources))
+        .distinct()
+        .select(
+            *(F.col("node").alias(k) for k in keys),
+            F.lit(None).cast("long").alias("_old"),
+            F.lit(0).cast("long").alias("_new"),
+        )
+        .transform(lineage_cut)
+    )
+    return dist(iterate(start, relax, rounds, lambda _, m: frontier(m).isEmpty()))
 
 
 def bfs_hop_distance(
@@ -704,7 +698,7 @@ def bfs_hop_distance(
     if not sources:
         raise ValueError("bfs_hop_distance needs a non-empty seed set")
     e = _unit_edges(edges)
-    dist = _relax(e, _seeds(e, sources, ["node"]), ["node"], max_hops)
+    dist = _relax(e, sources, ["node"], max_hops)
     return dist.select("node", F.col("dist").cast("int").alias("hop"))
 
 
@@ -811,7 +805,7 @@ def closeness_centrality(
         raise ValueError("closeness_centrality needs a non-empty seed set")
     e = _unit_edges(edges)
     keys = ["seed", "node"]
-    dist = _relax(e, _seeds(e, sources, keys), keys, max_hops).select(
+    dist = _relax(e, sources, keys, max_hops).select(
         *keys, F.col("dist").cast("int").alias("hop")
     )
     h_term = F.when(
@@ -908,7 +902,7 @@ def bellman_ford_distance(
     neg = F.format_string("negative weight w=%s on edge %s -> %s", "w", "src", "dst")
     w = F.when(F.col("w") < 0, F.raise_error(neg)).otherwise(F.col("w").cast("long"))
     e = edges.select("src", "dst", w.alias("w")).transform(lineage_cut)
-    return _relax(e, _seeds(e, sources, ["node"]), ["node"], rounds)
+    return _relax(e, sources, ["node"], rounds)
 
 
 def bellman_ford_oracle_sql(
@@ -973,7 +967,6 @@ def betweenness_from_seeds(
     seeds = list(source_nodes)
     if not seeds:
         raise ValueError("betweenness_from_seeds needs a non-empty seed set")
-    spark = edges.sparkSession
     e = edges.select("src", "dst").distinct().transform(lineage_cut)
     nodes = (
         e.select(F.col("src").alias("node"))

@@ -130,6 +130,9 @@ def scd2_customer_dim(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+_REMOVED_AT_EXIT: set[str] = set()  # scratch txn-log tables this process removes at exit
+
+
 @register("merge_upsert_orders_txnlog", oracle=_MERGE_ORACLE, tags=("M1", "S7"), bench=True)
 def merge_upsert_orders_txnlog(spark: SparkSession, sf_dir: str) -> DataFrame:
     """M1 MERGE executed THROUGH the transaction-log table format
@@ -138,6 +141,7 @@ def merge_upsert_orders_txnlog(spark: SparkSession, sf_dir: str) -> DataFrame:
     copy-on-write commit, and the result is read back from the resulting
     log snapshot. Same oracle as ``merge_upsert_orders`` — the storage
     format must not change MERGE semantics."""
+    import atexit
     import os
     import shutil
     import tempfile
@@ -161,11 +165,16 @@ def merge_upsert_orders_txnlog(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Per-process scratch table, rebuilt from scratch each run so the query
     # stays deterministic and re-runnable. The PID in the path keeps a bench
     # run that overlaps a correctness run from racing on rmtree + commits —
-    # determinism only needs stability within one invocation.
+    # determinism only needs stability within one invocation. The process
+    # removes the table when it exits (the returned frame reads it until
+    # then).
     path = os.path.join(
         tempfile.gettempdir(),
         f"txnlog_merge_{os.path.basename(sf_dir.rstrip('/'))}_{os.getpid()}",
     )
+    if path not in _REMOVED_AT_EXIT:
+        _REMOVED_AT_EXIT.add(path)
+        atexit.register(shutil.rmtree, path, ignore_errors=True)
     shutil.rmtree(path, ignore_errors=True)
     t = TxnLogTable(path, stat_cols=("o_orderkey",))
     t.create_or_replace(target)

@@ -77,7 +77,7 @@ from pyspark.sql.types import StructField, StructType
 
 from ..operators.merge import merge_upsert
 from .table_format import TableSink
-from ..lineage import lineage_cut, lineage_cut_eager
+from ..lineage import lineage_cut, lineage_cut_eager, release
 
 _LOG_DIR = "_txnlog"
 _DATA_DIR = "data"
@@ -695,9 +695,12 @@ class TxnLogTable:
             .select("__base", "__pos")
             .transform(lineage_cut_eager)  # one scan feeds the no-op check + the sidecar
         )
-        if hits.isEmpty():
-            return rv  # predicate matched nothing live
-        dvs = self._build_dv(spark, state, candidates, hits)
+        try:
+            if hits.isEmpty():
+                return rv  # predicate matched nothing live
+            dvs = self._build_dv(spark, state, candidates, hits)
+        finally:
+            release(hits)
         if dvs is None:
             return rv  # unreachable given the isEmpty guard; kept for safety
         return self.commit(
@@ -815,13 +818,16 @@ class TxnLogTable:
             .select(F.lit(dv_id).alias("dv_id"), "file", F.col("__pos").alias("pos"))
             .transform(lineage_cut_eager)  # one scan feeds both the collect and the write
         )
-        # One row per FILE — bounded by candidate file count, not rows.
-        affected = sorted(
-            r["file"] for r in out.select("file").distinct().collect()
-        )
-        if not affected:
-            return None
-        out.coalesce(1).write.mode("overwrite").parquet(os.path.join(self.path, rel_dir))
+        try:
+            # One row per FILE — bounded by candidate file count, not rows.
+            affected = sorted(
+                r["file"] for r in out.select("file").distinct().collect()
+            )
+            if not affected:
+                return None
+            out.coalesce(1).write.mode("overwrite").parquet(os.path.join(self.path, rel_dir))
+        finally:
+            release(out)
         return {f: rel_dir for f in affected}
 
     def update_where_mor(
@@ -869,31 +875,34 @@ class TxnLogTable:
             .filter(_predicate_expr(where))
             .transform(lineage_cut_eager)  # one scan feeds the guard, the DV, the images
         )
-        if matched.isEmpty():
-            return rv  # predicate matched nothing live: no-op, no commit
-        dvs = self._build_dv(
-            spark, state, candidates, matched.select("__base", "__pos")
-        )
-        updated = matched.select(
-            *[
-                set_exprs[f.name].cast(f.dataType).alias(f.name)
-                if f.name in set_exprs
-                else F.col(f.name)
-                for f in schema.fields
-            ]
-        )
-        # Generated columns recompute over the updated images — an UPDATE
-        # that changes a generation input can never leave a stale derived
-        # value behind (Delta's recompute-on-update rule). Cast pins the
-        # declared column type against expression-type drift.
-        types = {f.name: f.dataType for f in schema.fields}
-        for gname, gsql in sorted(state["generated"].items()):
-            if gname in types:
-                updated = updated.withColumn(
-                    gname, F.expr(gsql).cast(types[gname])
-                )
-        self._enforce_constraints(updated, state["constraints"])
-        adds, stats = self._write_data(updated, colmap=state["colmap"])
+        try:
+            if matched.isEmpty():
+                return rv  # predicate matched nothing live: no-op, no commit
+            dvs = self._build_dv(
+                spark, state, candidates, matched.select("__base", "__pos")
+            )
+            updated = matched.select(
+                *[
+                    set_exprs[f.name].cast(f.dataType).alias(f.name)
+                    if f.name in set_exprs
+                    else F.col(f.name)
+                    for f in schema.fields
+                ]
+            )
+            # Generated columns recompute over the updated images — an UPDATE
+            # that changes a generation input can never leave a stale derived
+            # value behind (Delta's recompute-on-update rule). Cast pins the
+            # declared column type against expression-type drift.
+            types = {f.name: f.dataType for f in schema.fields}
+            for gname, gsql in sorted(state["generated"].items()):
+                if gname in types:
+                    updated = updated.withColumn(
+                        gname, F.expr(gsql).cast(types[gname])
+                    )
+            self._enforce_constraints(updated, state["constraints"])
+            adds, stats = self._write_data(updated, colmap=state["colmap"])
+        finally:
+            release(matched)
         return self.commit(
             adds=adds,
             removes=[],
@@ -958,24 +967,27 @@ class TxnLogTable:
             .join(F.broadcast(key_set), list(keys), "left_semi")
             .transform(lineage_cut_eager)  # one scan feeds the guard, the DV, the merge
         )
-        # No live match → pure insert: don't publish a sidecar that merely
-        # re-vectors the candidates' existing positions.
-        dvs = (
-            None
-            if matched.isEmpty()
-            else self._build_dv(
-                spark, state, scan_files, matched.select("__base", "__pos")
+        try:
+            # No live match → pure insert: don't publish a sidecar that merely
+            # re-vectors the candidates' existing positions.
+            dvs = (
+                None
+                if matched.isEmpty()
+                else self._build_dv(
+                    spark, state, scan_files, matched.select("__base", "__pos")
+                )
             )
-        )
-        affected = (
-            matched.drop("__base", "__pos")
-            if dvs is not None
-            else spark.createDataFrame([], schema)
-        )
-        merged = merge_upsert(
-            affected, source, keys=list(keys), order_by=list(order_by)
-        )
-        adds, stats = self._write_data(merged, colmap=state["colmap"])
+            affected = (
+                matched.drop("__base", "__pos")
+                if dvs is not None
+                else spark.createDataFrame([], schema)
+            )
+            merged = merge_upsert(
+                affected, source, keys=list(keys), order_by=list(order_by)
+            )
+            adds, stats = self._write_data(merged, colmap=state["colmap"])
+        finally:
+            release(matched)
         return self.commit(
             adds=adds,
             removes=[],
@@ -1023,49 +1035,55 @@ class TxnLogTable:
         if not files:
             return rv
         key_set = keys_df.select(*keys).distinct().transform(lineage_cut_eager)
-        if key_set.isEmpty():
-            return rv  # empty key set: nothing to delete, no commit
-        # Bounded scalar probe: does the feed carry any NULL key at all?
-        null_pred = F.lit(False)
-        for k in keys:
-            null_pred = null_pred | F.col(k).isNull()
-        has_null = bool(key_set.filter(null_pred).limit(1).count())
-        candidates = self._prune_by_stats(
-            files, key_set.na.drop(subset=list(keys)), keys, state
-        )
-        if has_null:
-            # min/max bounds say nothing about NULLs: keep every file whose
-            # recorded null count is nonzero or unknown for some key column.
-            cm = state["colmap"]
-            extra = []
-            for f in files:
-                nulls = (state["stats"].get(f) or {}).get("__nulls") or {}
-                if any(nulls.get(cm.get(k, k), 1) != 0 for k in keys):
-                    extra.append(f)
-            candidates = sorted(set(candidates) | set(extra))
-        if not candidates:
-            return rv  # provably no file holds a matching key
-        live = self._live(
-            self._tagged_scan(spark, state, schema, candidates),
-            spark,
-            state,
-            candidates,
-        )
-        kren = key_set.select(*[F.col(k).alias(f"__k_{k}") for k in keys])
-        cond = F.lit(True)
-        for k in keys:
-            cond = cond & live[k].eqNullSafe(F.col(f"__k_{k}"))
-        # No broadcast hint: the key relation is unbounded (a CDC batch can
-        # carry millions of deletes) — AQE broadcasts when it is small and
-        # shuffles when it is not.
-        hits = (
-            live.join(kren, cond, "left_semi")
-            .select("__base", "__pos")
-            .transform(lineage_cut_eager)  # one scan feeds the no-op check + the sidecar
-        )
-        if hits.isEmpty():
-            return rv  # no live row matches any key: no-op, no commit
-        dvs = self._build_dv(spark, state, candidates, hits)
+        try:
+            if key_set.isEmpty():
+                return rv  # empty key set: nothing to delete, no commit
+            # Bounded scalar probe: does the feed carry any NULL key at all?
+            null_pred = F.lit(False)
+            for k in keys:
+                null_pred = null_pred | F.col(k).isNull()
+            has_null = bool(key_set.filter(null_pred).limit(1).count())
+            candidates = self._prune_by_stats(
+                files, key_set.na.drop(subset=list(keys)), keys, state
+            )
+            if has_null:
+                # min/max bounds say nothing about NULLs: keep every file whose
+                # recorded null count is nonzero or unknown for some key column.
+                cm = state["colmap"]
+                extra = []
+                for f in files:
+                    nulls = (state["stats"].get(f) or {}).get("__nulls") or {}
+                    if any(nulls.get(cm.get(k, k), 1) != 0 for k in keys):
+                        extra.append(f)
+                candidates = sorted(set(candidates) | set(extra))
+            if not candidates:
+                return rv  # provably no file holds a matching key
+            live = self._live(
+                self._tagged_scan(spark, state, schema, candidates),
+                spark,
+                state,
+                candidates,
+            )
+            kren = key_set.select(*[F.col(k).alias(f"__k_{k}") for k in keys])
+            cond = F.lit(True)
+            for k in keys:
+                cond = cond & live[k].eqNullSafe(F.col(f"__k_{k}"))
+            # No broadcast hint: the key relation is unbounded (a CDC batch can
+            # carry millions of deletes) — AQE broadcasts when it is small and
+            # shuffles when it is not.
+            hits = (
+                live.join(kren, cond, "left_semi")
+                .select("__base", "__pos")
+                .transform(lineage_cut_eager)  # one scan feeds the no-op check + the sidecar
+            )
+        finally:
+            release(key_set)
+        try:
+            if hits.isEmpty():
+                return rv  # no live row matches any key: no-op, no commit
+            dvs = self._build_dv(spark, state, candidates, hits)
+        finally:
+            release(hits)
         if dvs is None:
             return rv
         return self.commit(

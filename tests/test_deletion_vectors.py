@@ -383,3 +383,34 @@ def test_mor_read_plan_is_broadcast_anti_no_data_shuffle(spark, tmp_path):
     assert "BroadcastHashJoin" in plan and "LeftAnti" in plan
     assert len(re.findall(r"Exchange hashpartitioning", plan)) == 0
     assert "row_index" in plan  # identity comes from _metadata, not a window
+
+
+def test_mor_operations_release_their_cuts(spark, tmp_path):
+    """Each merge-on-read operation cuts its matched scan once and frees
+    the cut before it returns: nothing reads it after the commit, so the
+    pinned-RDD set is what it was before the call."""
+    sc = spark.sparkContext
+
+    def pinned():
+        return {int(k) for k in sc._jsc.getPersistentRDDs().keySet().toArray()}
+
+    t = _table(spark, tmp_path / "t")
+    src = spark.createDataFrame([(3, 9), (100, 1)], "k long, v long")
+    keys = spark.createDataFrame([(5,), (6,)], "k long")
+    ops = {
+        "delete_where_mor": lambda: t.delete_where_mor(spark, [("k", "<", 3)]),
+        "update_where_mor": lambda: t.update_where_mor(
+            spark, [("k", "=", 10)], {"v": F.lit(0)}
+        ),
+        "merge_keep_latest_mor": lambda: t.merge_keep_latest_mor(
+            spark, src, keys=("k",), order_by=[F.col("v").desc()]
+        ),
+        "merge_delete_mor": lambda: t.merge_delete_mor(spark, keys, ["k"]),
+    }
+    for name, op in ops.items():
+        before = pinned()
+        op()
+        assert pinned() - before == set(), f"{name} left its cut pinned"
+    got = {r["k"]: r["v"] for r in t.read(spark).collect()}
+    assert set(got) == (set(range(3, 60)) - {5, 6}) | {100}
+    assert got[3] == 9 and got[10] == 0 and got[100] == 1

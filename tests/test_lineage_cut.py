@@ -3,7 +3,8 @@ brief item 6): every cut site routes through lineage.lineage_cut, and
 ``spark.graft.lineage_cut`` swaps the mechanism without touching call
 sites. Default stays localCheckpoint (local-mode cheapest); `checkpoint`
 is the reliable path a 100 TB cluster needs (executor loss survivable).
-``lineage.release`` frees a superseded loop round under either mode."""
+``lineage.release`` frees a superseded loop round under either mode, and
+``lineage.iterate`` runs every round-cutting loop on one cadence."""
 
 from __future__ import annotations
 
@@ -15,6 +16,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from telecom_dataengineering_pipeline_spark.lineage import (
+    EAGER_EVERY,
+    iterate,
     lineage_cut,
     lineage_cut_eager,
 )
@@ -146,3 +149,44 @@ def test_connected_groups_releases_superseded_rounds(spark, mode):
         _restore(spark, prev)
     assert len(rows) == 65 and {r["group_id"] for r in rows} == {0}
     assert len(left) <= 2, f"{mode}: superseded rounds left behind: {left}"
+
+
+@pytest.mark.parametrize("mode", ["localCheckpoint", "checkpoint"])
+def test_iterate_cadence_and_release(spark, mode):
+    """Lazy cuts, an eager cut every EAGER_EVERY rounds that releases every
+    earlier cut of the loop, so at most EAGER_EVERY + 1 rounds are ever
+    pinned or on disk, and 2 (the last eager round and the lazy one after
+    it) once 2·EAGER_EVERY + 1 rounds are done. With ``until`` every round
+    is cut eagerly, the loop stops at the first true probe, and only the
+    last round stays: a cut ``start`` is released too."""
+    prev = _with_mode(spark, mode)
+    try:
+        spark.range(1).transform(lineage_cut)  # sets the checkpoint dir
+        before = _round_artifacts(spark, mode)
+        held = []
+
+        def inc(df):
+            held.append(len(_round_artifacts(spark, mode) - before))
+            return df.select((F.col("id") + 1).alias("id"))
+
+        rounds = 2 * EAGER_EVERY + 1
+        out = iterate(spark.range(8), inc, rounds)
+        assert sorted(r["id"] for r in out.collect()) == list(range(rounds, rounds + 8))
+        assert len(held) == rounds
+        assert max(held) <= EAGER_EVERY, held  # + the round being built
+        assert len(_round_artifacts(spark, mode) - before) <= 2
+
+        before = _round_artifacts(spark, mode)
+        probes = []
+
+        def reached(prev_state, state):
+            probes.append(state.agg(F.min("id")).first()[0])
+            return probes[-1] >= 5
+
+        out = iterate(spark.range(8).transform(lineage_cut), inc, rounds, reached)
+        assert sorted(r["id"] for r in out.collect()) == list(range(5, 13))
+        assert probes == [1, 2, 3, 4, 5]
+        left = _round_artifacts(spark, mode) - before
+    finally:
+        _restore(spark, prev)
+    assert len(left) <= 1, f"{mode}: probed rounds or the cut start left behind: {left}"

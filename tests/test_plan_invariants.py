@@ -810,6 +810,42 @@ def test_plan_dump_is_stable_within_a_session(spark, sf_smoke):
     assert dump(spark, fn, sf_smoke) == first
 
 
+def test_plan_dump_masks_the_txnlog_scratch_pid():
+    """merge_upsert_orders_txnlog's scratch table path carries the pid and
+    per-write file ids, so dumps from two processes differ only there until
+    it is masked."""
+    from telecom_dataengineering_pipeline_spark.plan_dump import mask
+
+    def line(pid, uid):
+        return (
+            "Location: InMemoryFileIndex(1 paths)"
+            f"[file:/tmp/txnlog_merge_sf0.001_{pid}/data/{uid}..., PartitionFilters: []"
+        )
+
+    assert mask(line(4242, "8a5b0")) == mask(line(17, "2949c1d2")) != line(17, "2949c1d2")
+    assert mask(line(17, "ab")).endswith("txnlog_merge_sf0.001_<pid>/..., PartitionFilters: []")
+
+
+def test_txnlog_merge_scratch_table_removed_at_exit(spark, sf_smoke, monkeypatch):
+    """Building merge_upsert_orders_txnlog registers the removal of its
+    scratch table with ``atexit``; the registered call removes it."""
+    import atexit
+    import os
+
+    from telecom_dataengineering_pipeline_spark.queries import writeside
+
+    calls = []
+    monkeypatch.setattr(atexit, "register", lambda fn, *a, **kw: calls.append((fn, a, kw)))
+    monkeypatch.setattr(writeside, "_REMOVED_AT_EXIT", set())
+    REGISTRY["merge_upsert_orders_txnlog"].fn(spark, sf_smoke)
+    (path,) = writeside._REMOVED_AT_EXIT
+    mine = [c for c in calls if path in c[1]]  # imports may register their own
+    assert os.path.isdir(path) and len(mine) == 1
+    fn, args, kwargs = mine[0]
+    fn(*args, **kwargs)
+    assert not os.path.exists(path)
+
+
 # Queries whose plan carries a BroadcastNestedLoopJoin because a SCALAR or
 # bounded broadcast frame crossJoins onto the relation BY CONSTRUCTION (a
 # one-row totals/cutoff/count anchor, the broadcast k-query set of an ANN

@@ -783,6 +783,92 @@ def test_hits_matches_integer_reference(spark):
         hits_scores(spark.createDataFrame(edges, "src long, dst long"), iters=0)
 
 
+# --- 64 rounds on a 64-link chain (lineage.iterate) -------------------------
+
+
+def _lpa_ref(pairs, iters):
+    """Synchronous LPA with the self-vote, ties to the smallest label."""
+    import collections
+
+    nbrs = collections.defaultdict(list)
+    for u, v in pairs:
+        nbrs[u].append(v)
+        nbrs[v].append(u)
+    lab = {n: n for n in nbrs}
+    for _ in range(iters):
+        nxt = {}
+        for n, ns in nbrs.items():
+            c = collections.Counter(lab[m] for m in ns)
+            c[lab[n]] += 1
+            nxt[n] = min(c, key=lambda x: (-c[x], x))
+        lab = nxt
+    return lab
+
+
+def _deep_chain(spark, name, rounds=64):
+    """Run one fixed-point operator for ``rounds`` rounds on the chain
+    0 → 1 → … → 64 and return (result, expected, new pinned RDDs). k-core
+    closes the chain's far end into a triangle, so its 2-core peels one
+    chain node per round and needs all 64 rounds."""
+    from telecom_dataengineering_pipeline_spark.operators import graph
+
+    sc = spark.sparkContext
+
+    def pinned():
+        return {int(k) for k in sc._jsc.getPersistentRDDs().keySet().toArray()}
+
+    chain = [(i, i + 1) for i in range(64)]
+    directed = spark.createDataFrame(chain, "src long, dst long")
+    before = pinned()
+    if name == "ppr":
+        got = {
+            r["node"]: r["rank_fp"]
+            for r in graph.personalized_pagerank(directed, [0], iters=rounds).collect()
+        }
+        want = _ppr_ref(chain, [0], iters=rounds)
+    elif name == "hits":
+        got = {
+            r["node"]: (r["hub_fp"], r["auth_fp"])
+            for r in graph.hits_scores(directed, iters=rounds).collect()
+        }
+        hub, auth = _hits_ref(chain, rounds)
+        want = {n: (hub.get(n, 0), auth.get(n, 0)) for n in set(hub) | set(auth)}
+    elif name == "lpa":
+        df = spark.createDataFrame(chain, "u long, v long")
+        got = {r["node"]: r["label"] for r in graph.label_propagation(df, iters=rounds).collect()}
+        want = _lpa_ref(chain, rounds)
+    else:
+        df = spark.createDataFrame(chain + [(64, 65), (65, 66), (64, 66)], "u long, v long")
+        got = sorted(r["node"] for r in graph.k_core(df, k=2, rounds=rounds).collect())
+        want = [64, 65, 66]
+    return got, want, len(pinned() - before)
+
+
+def _pinned_bound():
+    """Rounds ``lineage.iterate`` may hold, plus an operator's loop-invariant
+    cuts (≤ 3) and HITS's final hub cut — independent of the round count."""
+    from telecom_dataengineering_pipeline_spark.lineage import EAGER_EVERY
+
+    return EAGER_EVERY + 4
+
+
+def test_personalized_pagerank_survives_64_rounds(spark):
+    """A lazy cut per round chained 64 rounds deep overflowed the
+    serialization stack (StackOverflowError); the eager cut every
+    EAGER_EVERY rounds bounds the chain and releases what it supersedes."""
+    got, want, new_rdds = _deep_chain(spark, "ppr")
+    assert got == want and len(got) == 65
+    assert new_rdds <= _pinned_bound(), new_rdds
+
+
+@pytest.mark.slow
+@pytest.mark.parametrize("name", ["lpa", "kcore", "hits"])
+def test_fixed_point_loops_survive_64_rounds(spark, name):
+    got, want, new_rdds = _deep_chain(spark, name)
+    assert got == want
+    assert new_rdds <= _pinned_bound(), new_rdds
+
+
 # --- autocorrelation profile ----------------------------------------------
 
 

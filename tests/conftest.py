@@ -7,6 +7,22 @@ from telecom_dataengineering_pipeline_spark.session import get_spark
 SF_SMOKE = "/root/testdata/sf0.001"
 SF_CORRECT = "/root/testdata/sf0.01"
 
+# Default-tier collection ceiling; pytest.ini states its reason.
+DEFAULT_TIER_CEILING = 800
+
+
+def pytest_collection_finish(session):
+    """Fail the run before any test starts when the default tier (``-m "not
+    slow"``) has grown past its ceiling: a new test belongs in the slow tier
+    unless it guards a crash, or the ceiling moves with a re-measured run
+    time."""
+    n = len(session.items)
+    if session.config.getoption("markexpr") == "not slow" and n > DEFAULT_TIER_CEILING:
+        raise pytest.UsageError(
+            f"default tier collected {n} tests, over its ceiling of "
+            f"{DEFAULT_TIER_CEILING} (tests/conftest.py; reason in pytest.ini)"
+        )
+
 
 @pytest.fixture(scope="session")
 def spark():

@@ -17,15 +17,21 @@ Reproduces the reference's dbt model chain end-to-end as Spark stages
 All dimension joins broadcast; fact-side transforms are shuffle-free except
 the dedup exchange; aggregates are single hash-agg shuffles. The pipeline
 writes real partitioned parquet between layers, so partition pruning and
-schema behavior are exercised, not simulated.
+schema behavior are exercised, not simulated. Every table goes through one
+``write`` (one file per partition value) and comes back through one
+``read`` with the schema recorded at write time, so no stage runs a
+schema-inference job.
 """
 
 from __future__ import annotations
 
+import json
 import os
+from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from ..functions.keys import record_hash, surrogate_key
 from ..functions.masking import mask_email, mask_name, mask_phone
@@ -40,8 +46,12 @@ from ..quality.checks import (
     run_checks,
 )
 from ..sources.generators import call_events, crm_customers, towers_dim
-from ..sources.writers import write_partitioned
+from ..sources.table_format import ParquetDirSink
+from ..sources.writers import written_schema
 from .pipeline import PipelineDAG, Stage
+
+# Kept in a pipeline's base directory: the schema of every table ``write`` wrote.
+SCHEMAS_FILE = "_schemas.json"
 
 RESULT_DESC = {
     "0": "SUCCESS",
@@ -59,6 +69,49 @@ REGION_MAP = {
 }
 
 
+def _silver_calls(bronze: DataFrame) -> DataFrame:
+    """Bronze call events -> silver calls (silver_calls.sql:40-119):
+    keep-latest dedup on ``event_id``, the validity filter, the result-code
+    decode and the typed projection, with the ``year``/``month`` partition
+    columns derived from the call date."""
+    deduped = dedup_keep_latest(
+        bronze,
+        keys=["event_id"],
+        order_by=[F.col("_bronze_ingested_at").desc(), F.col("call_start_timestamp").desc()],
+    )
+    valid = deduped.filter(
+        F.col("event_id").isNotNull()
+        & F.col("caller_msisdn").isNotNull()
+        & F.col("tower_id").isNotNull()
+        & (F.col("duration_seconds") >= 0)
+    )
+    desc_expr = F.coalesce(
+        *[F.when(F.col("call_result_code") == k, v) for k, v in RESULT_DESC.items()],
+        F.concat(F.lit("UNKNOWN_"), F.col("call_result_code")),
+    )
+    silver = valid.select(
+        F.col("event_id").alias("call_id"),
+        F.col("caller_customer_id").alias("customer_id"),
+        "caller_msisdn",
+        "called_msisdn",
+        "tower_id",
+        F.col("call_start_timestamp").alias("call_start_ts"),
+        F.col("call_end_timestamp").alias("call_end_ts"),
+        F.col("call_start_timestamp").cast("date").alias("call_date"),
+        F.col("duration_seconds").cast("bigint").alias("duration_seconds"),
+        F.round(F.col("duration_seconds") / 60.0, 2).alias("duration_minutes"),
+        "call_result_code",
+        desc_expr.alias("call_result_desc"),
+        (F.col("call_result_code") == "0").alias("is_successful"),
+        (F.col("duration_seconds") == 0).alias("is_zero_duration"),
+        "plan_type",
+        F.col("roaming").cast("boolean").alias("roaming"),
+        F.col("revenue_usd").cast("decimal(12,4)").alias("revenue_usd"),
+        "_bronze_ingested_at",
+    )
+    return silver.withColumns({"year": F.year("call_date"), "month": F.month("call_date")})
+
+
 class MedallionPipeline:
     """Bronze→Silver→Gold over a base directory; each layer is real parquet."""
 
@@ -67,64 +120,53 @@ class MedallionPipeline:
         self.base = base_dir
         self.n_events = n_events
         self.n_customers = n_customers
-        self.tables: dict[str, DataFrame] = {}
 
     def path(self, layer: str, table: str) -> str:
         return os.path.join(self.base, layer, table)
 
+    def _schemas(self) -> dict[str, str]:
+        """``"layer.table"`` -> the JSON schema a read of that table returns,
+        as recorded in ``SCHEMAS_FILE`` under the base directory."""
+        try:
+            with open(os.path.join(self.base, SCHEMAS_FILE)) as f:
+                return json.load(f)
+        except FileNotFoundError:
+            return {}
+
+    def write(self, df: DataFrame, layer: str, table: str, partition_cols: Sequence[str] = ()) -> None:
+        """Every table is written here, through the parquet sink, and the
+        schema a read of it returns is recorded in the base directory, so
+        any later pipeline over that directory reads it back without
+        inference."""
+        ParquetDirSink().create_or_replace(df, self.path(layer, table), partition_cols)
+        schemas = self._schemas()
+        schemas[f"{layer}.{table}"] = written_schema(df.schema, partition_cols).json()
+        tmp = os.path.join(self.base, SCHEMAS_FILE + ".tmp")
+        with open(tmp, "w") as f:
+            json.dump(schemas, f)
+        os.replace(tmp, os.path.join(self.base, SCHEMAS_FILE))
+
+    def read(self, layer: str, table: str) -> DataFrame:
+        """Read a table written by ``write`` with the schema recorded then:
+        no schema-inference job, and no fallback to one."""
+        key = f"{layer}.{table}"
+        schema = self._schemas().get(key)
+        if schema is None:
+            raise ValueError(f"{key} was not written by a pipeline over {self.base}: its schema is unknown")
+        return self.spark.read.schema(StructType.fromJson(json.loads(schema))).parquet(self.path(layer, table))
+
     # -- Bronze ----------------------------------------------------------
     def ingest_bronze(self) -> None:
         ev = call_events(self.spark, n=self.n_events)
-        write_partitioned(ev, self.path("bronze", "call_events"))
-        crm = crm_customers(self.spark, n=self.n_customers)
-        crm.write.mode("overwrite").parquet(self.path("bronze", "crm_customers"))
+        self.write(ev, "bronze", "call_events", ("year", "month", "day"))
+        self.write(crm_customers(self.spark, n=self.n_customers), "bronze", "crm_customers")
 
     # -- Silver ----------------------------------------------------------
     def build_silver_calls(self) -> None:
-        bronze = self.spark.read.parquet(self.path("bronze", "call_events"))
-        deduped = dedup_keep_latest(
-            bronze,
-            keys=["event_id"],
-            order_by=[F.col("_bronze_ingested_at").desc(), F.col("call_start_timestamp").desc()],
-        )
-        valid = deduped.filter(
-            F.col("event_id").isNotNull()
-            & F.col("caller_msisdn").isNotNull()
-            & F.col("tower_id").isNotNull()
-            & (F.col("duration_seconds") >= 0)
-        )
-        desc_expr = F.coalesce(
-            *[F.when(F.col("call_result_code") == k, v) for k, v in RESULT_DESC.items()],
-            F.concat(F.lit("UNKNOWN_"), F.col("call_result_code")),
-        )
-        silver = valid.select(
-            F.col("event_id").alias("call_id"),
-            F.col("caller_customer_id").alias("customer_id"),
-            "caller_msisdn",
-            "called_msisdn",
-            "tower_id",
-            F.col("call_start_timestamp").alias("call_start_ts"),
-            F.col("call_end_timestamp").alias("call_end_ts"),
-            F.col("call_start_timestamp").cast("date").alias("call_date"),
-            F.col("duration_seconds").cast("bigint").alias("duration_seconds"),
-            F.round(F.col("duration_seconds") / 60.0, 2).alias("duration_minutes"),
-            "call_result_code",
-            desc_expr.alias("call_result_desc"),
-            (F.col("call_result_code") == "0").alias("is_successful"),
-            (F.col("duration_seconds") == 0).alias("is_zero_duration"),
-            "plan_type",
-            F.col("roaming").cast("boolean").alias("roaming"),
-            F.col("revenue_usd").cast("decimal(12,4)").alias("revenue_usd"),
-            "_bronze_ingested_at",
-        )
-        write_partitioned(
-            silver.withColumn("year", F.year("call_date")).withColumn("month", F.month("call_date")),
-            self.path("silver", "calls"),
-            partition_cols=("year", "month"),
-        )
+        self.write(_silver_calls(self.read("bronze", "call_events")), "silver", "calls", ("year", "month"))
 
     def build_silver_customers(self) -> None:
-        crm = self.spark.read.parquet(self.path("bronze", "crm_customers"))
+        crm = self.read("bronze", "crm_customers")
         latest = dedup_keep_latest(
             crm, keys=["customer_id"], order_by=[F.col("updated_at").desc(), F.col("_ingested_at").desc()]
         )
@@ -142,11 +184,11 @@ class MedallionPipeline:
             "churn_risk",
             F.col("updated_at").cast("timestamp").alias("crm_updated_at"),
         )
-        silver.write.mode("overwrite").parquet(self.path("silver", "customers"))
+        self.write(silver, "silver", "customers")
 
     # -- Gold ------------------------------------------------------------
     def build_dim_customers(self) -> None:
-        s = self.spark.read.parquet(self.path("silver", "customers"))
+        s = self.read("silver", "customers")
         dim = s.select(
             surrogate_key("customer_id").alias("customer_key"),
             "customer_id",
@@ -168,7 +210,7 @@ class MedallionPipeline:
             F.lit(None).cast("timestamp").alias("effective_end_date"),
             F.lit(True).alias("is_current"),
         )
-        dim.write.mode("overwrite").parquet(self.path("gold", "dim_customers"))
+        self.write(dim, "gold", "dim_customers")
 
     def build_dim_towers(self) -> None:
         t = towers_dim(self.spark)
@@ -185,7 +227,7 @@ class MedallionPipeline:
             F.col("tower_lat").cast("decimal(9,6)").alias("latitude"),
             F.col("tower_lon").cast("decimal(9,6)").alias("longitude"),
         )
-        dim.write.mode("overwrite").parquet(self.path("gold", "dim_towers"))
+        self.write(dim, "gold", "dim_towers")
 
     def build_dim_date(self) -> None:
         spine = self.spark.sql(
@@ -204,15 +246,15 @@ class MedallionPipeline:
             F.dayofweek(d).isin(1, 7).alias("is_weekend"),
             F.date_format(d, "yyyy-MM").alias("year_month"),
         )
-        dim.write.mode("overwrite").parquet(self.path("gold", "dim_date"))
+        self.write(dim, "gold", "dim_date")
 
     def build_fact_calls(self) -> None:
-        calls = self.spark.read.parquet(self.path("silver", "calls"))
-        dim_c = self.spark.read.parquet(self.path("gold", "dim_customers")).filter("is_current").select(
+        calls = self.read("silver", "calls")
+        dim_c = self.read("gold", "dim_customers").filter("is_current").select(
             "customer_key", "customer_id"
         )
-        dim_t = self.spark.read.parquet(self.path("gold", "dim_towers")).select("tower_key", "tower_id")
-        dim_d = self.spark.read.parquet(self.path("gold", "dim_date")).select("date_key", "full_date")
+        dim_t = self.read("gold", "dim_towers").select("tower_key", "tower_id")
+        dim_d = self.read("gold", "dim_date").select("date_key", "full_date")
         joined = broadcast_star_join(
             calls,
             [
@@ -236,14 +278,15 @@ class MedallionPipeline:
             F.col("revenue_usd").cast("decimal(12,4)").alias("revenue_usd"),
             F.lit(1).cast("bigint").alias("call_count"),
         )
-        write_partitioned(
-            fact.withColumn("year", F.year("call_date")).withColumn("month", F.month("call_date")),
-            self.path("gold", "fact_calls"),
-            partition_cols=("year", "month"),
+        self.write(
+            fact.withColumns({"year": F.year("call_date"), "month": F.month("call_date")}),
+            "gold",
+            "fact_calls",
+            ("year", "month"),
         )
 
     def build_agg_tower_hourly(self) -> None:
-        calls = self.spark.read.parquet(self.path("silver", "calls"))
+        calls = self.read("silver", "calls")
         agg = (
             calls.groupBy(
                 "tower_id", F.date_trunc("hour", "call_start_ts").alias("measurement_hour")
@@ -266,11 +309,11 @@ class MedallionPipeline:
                 ),
             )
         )
-        agg.write.mode("overwrite").parquet(self.path("gold", "agg_tower_hourly"))
+        self.write(agg, "gold", "agg_tower_hourly")
 
     def build_agg_customer_monthly(self) -> None:
-        calls = self.spark.read.parquet(self.path("silver", "calls"))
-        dim_c = self.spark.read.parquet(self.path("gold", "dim_customers")).filter("is_current")
+        calls = self.read("silver", "calls")
+        dim_c = self.read("gold", "dim_customers").filter("is_current")
         monthly = (
             calls.groupBy("customer_id", F.date_format("call_date", "yyyy-MM").alias("year_month"))
             .agg(
@@ -283,7 +326,7 @@ class MedallionPipeline:
         joined = dim_c.select("customer_key", "customer_id", "plan_tier").join(
             monthly, "customer_id", "left"
         ).filter(F.col("year_month").isNotNull())
-        joined.write.mode("overwrite").parquet(self.path("gold", "agg_customer_monthly"))
+        self.write(joined, "gold", "agg_customer_monthly")
 
     # -- Incremental refresh (M1 + P4 + S12 composed) --------------------
     def incremental_silver_calls(self, lookback_days: int = 3) -> None:
@@ -291,68 +334,29 @@ class MedallionPipeline:
         than silver's high-water mark (minus the late-data lookback,
         dbt_project.yml:53) are re-processed, then MERGEd on call_id with
         keep-latest semantics — the dbt incremental model's exact shape."""
-        bronze = self.spark.read.parquet(self.path("bronze", "call_events"))
-        existing = self.spark.read.parquet(self.path("silver", "calls"))
+        bronze = self.read("bronze", "call_events")
+        existing = self.read("silver", "calls")
         hwm = existing.agg(F.max("_bronze_ingested_at")).collect()[0][0]
         fresh = bronze.filter(
             F.col("_bronze_ingested_at") > F.lit(hwm) - F.expr(f"INTERVAL {lookback_days} DAYS")
         )
-        deduped = dedup_keep_latest(
-            fresh,
-            keys=["event_id"],
-            order_by=[F.col("_bronze_ingested_at").desc(), F.col("call_start_timestamp").desc()],
-        )
-        valid = deduped.filter(
-            F.col("event_id").isNotNull()
-            & F.col("caller_msisdn").isNotNull()
-            & F.col("tower_id").isNotNull()
-            & (F.col("duration_seconds") >= 0)
-        )
-        desc_expr = F.coalesce(
-            *[F.when(F.col("call_result_code") == k, v) for k, v in RESULT_DESC.items()],
-            F.concat(F.lit("UNKNOWN_"), F.col("call_result_code")),
-        )
-        incoming = valid.select(
-            F.col("event_id").alias("call_id"),
-            F.col("caller_customer_id").alias("customer_id"),
-            "caller_msisdn",
-            "called_msisdn",
-            "tower_id",
-            F.col("call_start_timestamp").alias("call_start_ts"),
-            F.col("call_end_timestamp").alias("call_end_ts"),
-            F.col("call_start_timestamp").cast("date").alias("call_date"),
-            F.col("duration_seconds").cast("bigint").alias("duration_seconds"),
-            F.round(F.col("duration_seconds") / 60.0, 2).alias("duration_minutes"),
-            "call_result_code",
-            desc_expr.alias("call_result_desc"),
-            (F.col("call_result_code") == "0").alias("is_successful"),
-            (F.col("duration_seconds") == 0).alias("is_zero_duration"),
-            "plan_type",
-            F.col("roaming").cast("boolean").alias("roaming"),
-            F.col("revenue_usd").cast("decimal(12,4)").alias("revenue_usd"),
-            "_bronze_ingested_at",
-        )
         # MERGE through the table-format contract (S7): the parquet sink
         # resolves keep-latest and swaps via rename-aside; a Delta/Iceberg
         # sink executes a real MERGE INTO behind the same call.
-        from ..sources.table_format import ParquetDirSink
-
         sink = ParquetDirSink(partition_by=("year", "month"))
         sink.merge_keep_latest(
             self.spark,
             self.path("silver", "calls"),
-            incoming.withColumn("year", F.year("call_date")).withColumn(
-                "month", F.month("call_date")
-            ),
+            _silver_calls(fresh),
             keys=["call_id"],
             order_by=[F.col("_bronze_ingested_at").desc()],
         )
 
     # -- Quality gate ----------------------------------------------------
     def quality_gate(self) -> list:
-        calls = self.spark.read.parquet(self.path("silver", "calls"))
-        fact = self.spark.read.parquet(self.path("gold", "fact_calls"))
-        dim_c = self.spark.read.parquet(self.path("gold", "dim_customers"))
+        calls = self.read("silver", "calls")
+        fact = self.read("gold", "fact_calls")
+        dim_c = self.read("gold", "dim_customers")
         results = run_checks(
             {
                 "silver_calls_call_id_unique": expect_unique(calls, ["call_id"]),

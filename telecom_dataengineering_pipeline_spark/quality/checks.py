@@ -6,14 +6,17 @@ pass = empty); ``run_checks`` evaluates a suite and returns per-check
 pass/fail with violation counts — the pipeline gate the reference runs before
 publishing (cdr_pipeline_dag.py:205-212).
 
-Counting violations is one aggregate per check — on a cluster these run as
-plain jobs; nothing collects raw rows unless a caller asks for samples.
+A suite is counted in one action: each check's violating rows are tagged
+with the check's index, unioned, grouped and counted, so a gate of k checks
+runs one job (plus the exchanges its checks plan), not k ``count()`` jobs.
+Nothing collects raw rows unless a caller asks for samples.
 """
 
 from __future__ import annotations
 
 from collections.abc import Mapping, Sequence
 from dataclasses import dataclass
+from functools import reduce
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -63,13 +66,17 @@ class CheckResult:
 
 
 def run_checks(checks: Mapping[str, DataFrame], severities: Mapping[str, str] | None = None) -> list[CheckResult]:
-    """Evaluate named violation DataFrames → results. A 'warn' severity never
-    fails the gate (reference uses warn for FK relationships,
-    models/gold/facts/schema.yml:18-35)."""
+    """Evaluate named violation DataFrames → results, in ``checks`` order.
+    A 'warn' severity never fails the gate (reference uses warn for FK
+    relationships, models/gold/facts/schema.yml:18-35)."""
+    if not checks:
+        return []
     sev = severities or {}
+    tagged = [viol.select(F.lit(i).alias("_check")) for i, viol in enumerate(checks.values())]
+    counts = dict(reduce(DataFrame.unionAll, tagged).groupBy("_check").count().collect())
     out = []
-    for name, viol in checks.items():
-        n = viol.count()
+    for i, name in enumerate(checks):
+        n = counts.get(i, 0)
         out.append(
             CheckResult(
                 name=name,

@@ -31,7 +31,6 @@ from pyspark.sql import functions as F
 from ..plans.medallion import REGION_MAP, MedallionPipeline
 from ..sources.catalog import load_table
 from ..sources.generators import TOWERS
-from ..sources.writers import write_partitioned
 from ..streaming.staging import pin_staging_mtimes
 from .registry import register
 
@@ -199,12 +198,14 @@ def medallion_fact_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     shutil.rmtree(base_dir, ignore_errors=True)
     pipe = MedallionPipeline(spark, base_dir)
-    write_partitioned(
-        _bronze_call_events(spark, sf_dir).withColumn("year", F.year("call_start_timestamp")).withColumn("month", F.month("call_start_timestamp")),
-        pipe.path("bronze", "call_events"),
-        partition_cols=("year", "month"),
+    ts = F.col("call_start_timestamp")
+    pipe.write(
+        _bronze_call_events(spark, sf_dir).withColumns({"year": F.year(ts), "month": F.month(ts)}),
+        "bronze",
+        "call_events",
+        ("year", "month"),
     )
-    _bronze_crm(spark, sf_dir).write.mode("overwrite").parquet(pipe.path("bronze", "crm_customers"))
+    pipe.write(_bronze_crm(spark, sf_dir), "bronze", "crm_customers")
     pipe.build_silver_calls()
     pipe.build_silver_customers()
     pipe.build_dim_customers()
@@ -215,8 +216,8 @@ def medallion_fact_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     pipe.build_agg_customer_monthly()
     pipe.quality_gate()
 
-    hourly = spark.read.parquet(pipe.path("gold", "agg_tower_hourly"))
-    dim_t = spark.read.parquet(pipe.path("gold", "dim_towers"))
+    hourly = pipe.read("gold", "agg_tower_hourly")
+    dim_t = pipe.read("gold", "dim_towers")
     tower_hour = hourly.join(F.broadcast(dim_t.select("tower_id", "region")), "tower_id").select(
         F.lit("tower_hour").alias("grain"),
         F.col("tower_id").alias("k1"),
@@ -228,7 +229,7 @@ def medallion_fact_build(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("total_revenue_usd").cast("double").alias("revenue"),
         F.col("success_rate_pct").alias("ratio_pct"),
     )
-    monthly = spark.read.parquet(pipe.path("gold", "agg_customer_monthly")).select(
+    monthly = pipe.read("gold", "agg_customer_monthly").select(
         F.lit("customer_month").alias("grain"),
         F.col("customer_id").alias("k1"),
         F.col("year_month").alias("k2"),
@@ -239,7 +240,7 @@ def medallion_fact_build(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("total_revenue_usd").cast("double").alias("revenue"),
         F.lit(None).cast("double").alias("ratio_pct"),
     )
-    fact = spark.read.parquet(pipe.path("gold", "fact_calls"))
+    fact = pipe.read("gold", "fact_calls")
     recon = (
         fact.groupBy(
             F.when(F.col("customer_key") == "UNKNOWN", "UNKNOWN").otherwise("KNOWN").alias("k1"),

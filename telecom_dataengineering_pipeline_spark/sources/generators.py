@@ -13,10 +13,15 @@ schemas), including the quirks that matter to downstream operators:
 - tower dimension (15 rows) — the broadcast-join fixture.
 
 Being pure column expressions over ``spark.range``, generation is itself
-distributed — generating a 10⁹-row fixture is the same code path.
+distributed — generating a 10⁹-row fixture is the same code path. No row
+is built in Python: the tower rows are one literal array of structs
+expanded by ``inline`` in the JVM, so no generator starts a Python worker
+(``createDataFrame`` over a list starts them to ``parallelize`` it).
 """
 
 from __future__ import annotations
+
+from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -44,11 +49,21 @@ TOWERS = [
 ]
 
 
+_TOWER_FIELDS = "tower_id:string,tower_city:string,tower_state:string,tower_lat:double,tower_lon:double"
+
+
+def _literal_rows(spark: SparkSession, rows: Sequence[tuple], fields: str) -> DataFrame:
+    """``rows`` as a DataFrame built in the JVM: ``inline`` over one literal
+    array of structs, cast to ``array<struct<fields>>`` for the column
+    names, types and (nullable) fields ``createDataFrame`` would infer,
+    without the Python workers its ``parallelize`` starts."""
+    structs = F.array(*[F.struct(*[F.lit(v) for v in r]) for r in rows])
+    return spark.range(0, 1, 1, 1).select(F.inline(structs.cast(f"array<struct<{fields}>>")))
+
+
 def towers_dim(spark: SparkSession) -> DataFrame:
     """The static tower dimension (S8 seed analog)."""
-    return spark.createDataFrame(
-        TOWERS, ["tower_id", "tower_city", "tower_state", "tower_lat", "tower_lon"]
-    )
+    return _literal_rows(spark, TOWERS, _TOWER_FIELDS)
 
 
 def _hash_mod(col, m: int):
@@ -63,75 +78,62 @@ def call_events(
 ) -> DataFrame:
     """Bronze ``call_events`` fixture (FIXTURES.md §1) with duplicate
     injection: every ``dup_fraction_mod``-th event re-appears with a later
-    ``_bronze_ingested_at`` (at-least-once redelivery)."""
+    ``_bronze_ingested_at`` (at-least-once redelivery).
+
+    One ``withColumns`` per dependency level; ``plan_type`` and ``roaming``
+    ride in the last one so the columns keep the bronze order."""
+    seq = F.col("seq")
+    result = F.col("result_idx")
+    ok = F.col("call_result_code") == "0"
     base = (
         spark.range(n)
         .withColumnRenamed("id", "seq")
-        .withColumn("event_id", F.concat(F.lit("EVT-"), F.lpad(F.col("seq").cast("string"), 10, "0")))
-        .withColumn("customer_num", _hash_mod(F.col("seq"), max(1, n // 20)))
-        .withColumn(
-            "caller_customer_id",
-            F.concat(F.lit("CUST-"), F.lpad(F.col("customer_num").cast("string"), 8, "0")),
-        )
-        .withColumn(
-            "caller_msisdn",
-            F.concat(F.lit("+1"), F.lpad((_hash_mod(F.col("seq") + 1, 9_999_999_999)).cast("string"), 10, "0")),
-        )
-        .withColumn(
-            "called_msisdn",
-            F.concat(F.lit("+1"), F.lpad((_hash_mod(F.col("seq") + 7, 9_999_999_999)).cast("string"), 10, "0")),
-        )
-        .withColumn("tower_idx", _hash_mod(F.col("seq") + 3, len(TOWERS)).cast("int"))
-        .withColumn(
-            "call_start_timestamp",
-            F.lit(start_ts).cast("timestamp") + (F.col("seq") * 104729 % 2_592_000) * F.expr("INTERVAL 1 SECOND"),
-        )
-        .withColumn("result_idx", _hash_mod(F.col("seq") + 11, 100))
-        .withColumn(
-            "call_result_code",
-            F.when(F.col("result_idx") < 85, "0")
-            .when(F.col("result_idx") < 90, "17")
-            .when(F.col("result_idx") < 93, "21")
-            .when(F.col("result_idx") < 96, "31")
-            .when(F.col("result_idx") < 98, "38")
-            .otherwise("41"),
-        )
-        .withColumn(
-            "duration_seconds",
-            F.when(F.col("call_result_code") == "0", 5 + _hash_mod(F.col("seq") + 13, 3596)).otherwise(F.lit(0)),
-        )
-        .withColumn(
-            "call_end_timestamp",
-            F.when(
-                F.col("call_result_code") == "0",
-                F.col("call_start_timestamp") + F.col("duration_seconds") * F.expr("INTERVAL 1 SECOND"),
+        .withColumns({
+            "event_id": F.concat(F.lit("EVT-"), F.lpad(seq.cast("string"), 10, "0")),
+            "caller_customer_id": F.concat(
+                F.lit("CUST-"), F.lpad(_hash_mod(seq, max(1, n // 20)).cast("string"), 8, "0")
             ),
-        )
-        .withColumn("plan_type", F.element_at(F.array(*[F.lit(p) for p in PLAN_TYPES]), (_hash_mod(F.col("seq") + 17, 5) + 1).cast("int")))
-        .withColumn("roaming", _hash_mod(F.col("seq") + 19, 100) < 8)
-        .withColumn(
-            "revenue_usd",
-            F.when(F.col("call_result_code") == "0", F.round(F.col("duration_seconds") * 0.02, 2)).otherwise(F.lit(0.0)),
-        )
+            "caller_msisdn": F.concat(F.lit("+1"), F.lpad((_hash_mod(seq + 1, 9_999_999_999)).cast("string"), 10, "0")),
+            "called_msisdn": F.concat(F.lit("+1"), F.lpad((_hash_mod(seq + 7, 9_999_999_999)).cast("string"), 10, "0")),
+            "tower_idx": _hash_mod(seq + 3, len(TOWERS)).cast("int"),
+            "call_start_timestamp": F.lit(start_ts).cast("timestamp")
+            + (seq * 104729 % 2_592_000) * F.expr("INTERVAL 1 SECOND"),
+            "result_idx": _hash_mod(seq + 11, 100),
+        })
+        .withColumns({
+            "call_result_code": F.when(result < 85, "0")
+            .when(result < 90, "17")
+            .when(result < 93, "21")
+            .when(result < 96, "31")
+            .when(result < 98, "38")
+            .otherwise("41"),
+        })
+        .withColumns({"duration_seconds": F.when(ok, 5 + _hash_mod(seq + 13, 3596)).otherwise(F.lit(0))})
+        .withColumns({
+            "call_end_timestamp": F.when(
+                ok, F.col("call_start_timestamp") + F.col("duration_seconds") * F.expr("INTERVAL 1 SECOND")
+            ),
+            "plan_type": F.element_at(F.array(*[F.lit(p) for p in PLAN_TYPES]), (_hash_mod(seq + 17, 5) + 1).cast("int")),
+            "roaming": _hash_mod(seq + 19, 100) < 8,
+            "revenue_usd": F.when(ok, F.round(F.col("duration_seconds") * 0.02, 2)).otherwise(F.lit(0.0)),
+        })
     )
     # deterministic tower join: index by row order of the static seed
-    towers_idx = spark.createDataFrame(
-        [(i, *t) for i, t in enumerate(TOWERS)],
-        ["tower_idx", "tower_id", "tower_city", "tower_state", "tower_lat", "tower_lon"],
+    towers_idx = _literal_rows(
+        spark, [(i, *t) for i, t in enumerate(TOWERS)], "tower_idx:bigint," + _TOWER_FIELDS
     )
-    ev = base.join(F.broadcast(towers_idx), "tower_idx").drop("tower_idx", "result_idx", "customer_num")
-    ev = ev.withColumn("event_type", F.lit("CALL")).withColumn(
-        "_bronze_ingested_at", F.col("call_start_timestamp") + F.expr("INTERVAL 5 MINUTE")
-    )
+    ev = base.join(F.broadcast(towers_idx), "tower_idx").drop("tower_idx", "result_idx").withColumns({
+        "event_type": F.lit("CALL"),
+        "_bronze_ingested_at": F.col("call_start_timestamp") + F.expr("INTERVAL 5 MINUTE"),
+    })
     dups = (
-        ev.filter(F.col("seq") % dup_fraction_mod == 0)
+        ev.filter(seq % dup_fraction_mod == 0)
         .withColumn("_bronze_ingested_at", F.col("_bronze_ingested_at") + F.expr("INTERVAL 30 MINUTE"))
     )
-    out = ev.unionByName(dups)
+    ts = F.col("call_start_timestamp")
     return (
-        out.withColumn("year", F.year("call_start_timestamp"))
-        .withColumn("month", F.month("call_start_timestamp"))
-        .withColumn("day", F.dayofmonth("call_start_timestamp"))
+        ev.unionByName(dups)
+        .withColumns({"year": F.year(ts), "month": F.month(ts), "day": F.dayofmonth(ts)})
         .drop("seq")
     )
 
@@ -140,28 +142,36 @@ def crm_customers(
     spark: SparkSession, n: int = 1_000, versions_mod: int = 4
 ) -> DataFrame:
     """CRM batch fixture (FIXTURES.md §5): every ``versions_mod``-th customer
-    has two versions with different ``updated_at`` (keep-latest fodder)."""
+    has two versions with different ``updated_at`` (keep-latest fodder).
+    One ``withColumns`` per dependency level, placed as in ``call_events``
+    to keep the column order."""
+    seq = F.col("seq")
+    s = seq.cast("string")
+    churn = _hash_mod(seq + 41, 100)
     base = (
         spark.range(n)
         .withColumnRenamed("id", "seq")
-        .withColumn("customer_id", F.concat(F.lit("CUST-"), F.lpad(F.col("seq").cast("string"), 8, "0")))
-        .withColumn("first_name", F.concat(F.lit("First"), F.col("seq").cast("string")))
-        .withColumn("last_name", F.concat(F.lit("Last"), F.col("seq").cast("string")))
-        .withColumn("email", F.concat(F.lit("user"), F.col("seq").cast("string"), F.lit("@example.com")))
-        .withColumn("phone_number", F.concat(F.lit("+1206555"), F.lpad((F.col("seq") % 10000).cast("string"), 4, "0")))
-        .withColumn("plan_tier", F.element_at(F.array(F.lit("Basic"), F.lit("Standard"), F.lit("Premium"), F.lit("Unlimited"), F.lit("BusinessPro")), (_hash_mod(F.col("seq") + 23, 5) + 1).cast("int")))
-        .withColumn("plan_fee", (F.pmod(_hash_mod(F.col("seq") + 29, 5), F.lit(5)) * 30 + 30).cast("int"))
-        .withColumn("plan_code", F.concat(F.col("plan_tier"), F.lit("_"), F.col("plan_fee").cast("string")))
-        .withColumn("is_active", _hash_mod(F.col("seq") + 31, 100) < 92)
-        .withColumn("nps_score", (_hash_mod(F.col("seq") + 37, 201) - 100).cast("int"))
-        .withColumn("churn_risk", F.when(_hash_mod(F.col("seq") + 41, 100) < 60, "LOW").when(_hash_mod(F.col("seq") + 41, 100) < 85, "MEDIUM").otherwise("HIGH"))
-        .withColumn("updated_at", F.lit("2024-01-01 00:00:00").cast("timestamp") + (F.col("seq") % 86400) * F.expr("INTERVAL 1 SECOND"))
-        .withColumn("_ingested_at", F.col("updated_at") + F.expr("INTERVAL 1 HOUR"))
+        .withColumns({
+            "customer_id": F.concat(F.lit("CUST-"), F.lpad(s, 8, "0")),
+            "first_name": F.concat(F.lit("First"), s),
+            "last_name": F.concat(F.lit("Last"), s),
+            "email": F.concat(F.lit("user"), s, F.lit("@example.com")),
+            "phone_number": F.concat(F.lit("+1206555"), F.lpad((seq % 10000).cast("string"), 4, "0")),
+            "plan_tier": F.element_at(F.array(F.lit("Basic"), F.lit("Standard"), F.lit("Premium"), F.lit("Unlimited"), F.lit("BusinessPro")), (_hash_mod(seq + 23, 5) + 1).cast("int")),
+            "plan_fee": (F.pmod(_hash_mod(seq + 29, 5), F.lit(5)) * 30 + 30).cast("int"),
+        })
+        .withColumns({
+            "plan_code": F.concat(F.col("plan_tier"), F.lit("_"), F.col("plan_fee").cast("string")),
+            "is_active": _hash_mod(seq + 31, 100) < 92,
+            "nps_score": (_hash_mod(seq + 37, 201) - 100).cast("int"),
+            "churn_risk": F.when(churn < 60, "LOW").when(churn < 85, "MEDIUM").otherwise("HIGH"),
+            "updated_at": F.lit("2024-01-01 00:00:00").cast("timestamp") + (seq % 86400) * F.expr("INTERVAL 1 SECOND"),
+        })
+        .withColumns({"_ingested_at": F.col("updated_at") + F.expr("INTERVAL 1 HOUR")})
     )
-    v2 = (
-        base.filter(F.col("seq") % versions_mod == 0)
-        .withColumn("updated_at", F.col("updated_at") + F.expr("INTERVAL 2 DAY"))
-        .withColumn("_ingested_at", F.col("_ingested_at") + F.expr("INTERVAL 2 DAY"))
-        .withColumn("churn_risk", F.lit("HIGH"))
-    )
+    v2 = base.filter(seq % versions_mod == 0).withColumns({
+        "updated_at": F.col("updated_at") + F.expr("INTERVAL 2 DAY"),
+        "_ingested_at": F.col("_ingested_at") + F.expr("INTERVAL 2 DAY"),
+        "churn_risk": F.lit("HIGH"),
+    })
     return base.unionByName(v2).drop("seq")

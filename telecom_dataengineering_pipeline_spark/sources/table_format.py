@@ -31,9 +31,34 @@ import os
 import shutil
 from collections.abc import Sequence
 
+import pyarrow.parquet as pq
 from pyspark.sql import Column, DataFrame, SparkSession
 
 from ..operators.merge import merge_upsert
+from .writers import write_partitioned
+
+
+def _check_aligned(table: str, columns: Sequence[str]) -> None:
+    """Raise ``ValueError`` unless ``table``'s columns are ``columns``: the
+    names in one data file's footer plus the partition directories above
+    it, read with pyarrow (no Spark job). A table with no data file holds no
+    rows a misaligned rewrite could lose."""
+    for root, dirs, files in os.walk(table):
+        dirs[:] = sorted(d for d in dirs if not d.startswith(("_", ".")))
+        data = sorted(f for f in files if not f.startswith(("_", ".")))
+        if data:
+            rel = os.path.relpath(root, table).split(os.sep)
+            found = set(pq.read_schema(os.path.join(root, data[0])).names)
+            found |= {d.split("=", 1)[0] for d in rel if "=" in d}
+            break
+    else:
+        return
+    missing, extra = sorted(found - set(columns)), sorted(set(columns) - found)
+    if missing or extra:
+        raise ValueError(
+            f"{table}: MERGE source is not aligned with the table: "
+            f"missing columns {missing}, extra columns {extra}"
+        )
 
 
 class TableSink:
@@ -77,10 +102,10 @@ class ParquetDirSink(TableSink):
         self, df: DataFrame, table: str, partition_by: Sequence[str] = ()
     ) -> None:
         cols = tuple(partition_by) or self.partition_by
-        w = df.write.mode("overwrite").option("compression", "snappy")
         if cols:
-            w = w.partitionBy(*cols)
-        w.parquet(table)
+            write_partitioned(df, table, cols)
+        else:
+            df.write.mode("overwrite").option("compression", "snappy").parquet(table)
 
     def merge_keep_latest(
         self,
@@ -91,8 +116,11 @@ class ParquetDirSink(TableSink):
         order_by: Sequence[Column],
     ) -> None:
         # Like MERGE INTO, the source must be schema-aligned with the target
-        # (partition columns included — derive them before calling).
-        target = spark.read.parquet(table)
+        # (partition columns included — derive them before calling). Once a
+        # data file's footer shows the columns match, the target is read
+        # with the source's schema: no inference job.
+        _check_aligned(table, source.columns)
+        target = spark.read.schema(source.schema).parquet(table)
         merged = merge_upsert(target, source, keys=keys, order_by=order_by)
         staging = table.rstrip("/") + "__staging"
         self.create_or_replace(merged, staging)

@@ -4,10 +4,20 @@ Reproduces the reference's physical-layout policies (SURVEY.md §2.6, §2.10):
 
 - S5 Hive-style partitioned parquet (``kafka_to_bronze.py:63-67``:
   ``year=/month=/day=``) → ``partitionBy`` — static+dynamic partition
-  pruning downstream.
+  pruning downstream. The write carries AQE's ``REBALANCE`` hint on the
+  partition columns, so the rows of one partition value go to one write
+  task. Without it every write task opens a file in every partition
+  directory it holds rows for. The hint costs one shuffle per write; it
+  pays off while each partition value holds few rows per write task (a
+  few hundred in the medallion pass, which then lands one file per
+  value). How partition values far larger than AQE's advisory partition
+  size are split has not been measured.
 - O3 compaction to ~target-file-size (``bronze_compaction.py:54,115-122``:
   256 MB files, row-size estimate) → ``repartition(n)`` +
-  ``maxRecordsPerFile`` belt-and-braces.
+  ``maxRecordsPerFile`` belt-and-braces, for callers that size files
+  from a row count.
+- ``written_schema`` is the schema a read of such a write returns, so a
+  caller that wrote the table reads it back with no schema-inference job.
 - O2 partition-local sort for compression/scan locality
   (``bronze_compaction.py:112-113``) → ``sortWithinPartitions``.
 - O4 z-order approximation (``bronze_compaction.py:141-151``; vanilla Spark
@@ -24,6 +34,7 @@ import math
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructField, StructType
 
 TARGET_FILE_BYTES = 256 * 1024 * 1024  # reference bronze_compaction.py:54
 DEFAULT_ROW_BYTES = 500  # reference's estimate, bronze_compaction.py:117
@@ -35,13 +46,25 @@ def write_partitioned(
     partition_cols: Sequence[str] = ("year", "month", "day"),
     mode: str = "overwrite",
 ) -> None:
-    """Hive-layout snappy parquet (S4+S5)."""
+    """Hive-layout snappy parquet (S4+S5), each partition value's rows
+    rebalanced into one write task."""
     (
-        df.write.mode(mode)
+        df.hint("rebalance", *partition_cols)
+        .write.mode(mode)
         .option("compression", "snappy")
         .partitionBy(*partition_cols)
         .parquet(path)
     )
+
+
+def written_schema(schema: StructType, partition_cols: Sequence[str] = ()) -> StructType:
+    """The schema a parquet read of ``schema`` written with ``partitionBy(
+    *partition_cols)`` returns: the data columns, then the partition
+    columns, every field nullable (Spark writes parquet columns nullable).
+    Passing it to ``spark.read.schema`` skips the inference job."""
+    data = [f for f in schema.fields if f.name not in partition_cols]
+    parts = [schema[c] for c in partition_cols]
+    return StructType([StructField(f.name, f.dataType, True) for f in data + parts])
 
 
 def compact_to_target_size(

@@ -1,5 +1,7 @@
 from __future__ import annotations
 
+import itertools
+
 import pytest
 
 from telecom_dataengineering_pipeline_spark.session import get_spark
@@ -22,6 +24,24 @@ def pytest_collection_finish(session):
             f"default tier collected {n} tests, over its ceiling of "
             f"{DEFAULT_TIER_CEILING} (tests/conftest.py; reason in pytest.ini)"
         )
+
+
+_JOB_GROUPS = itertools.count()
+
+
+def job_ids(spark, fn) -> list[int]:
+    """Run ``fn()`` under a fresh job group and return the ids of the Spark
+    jobs it ran (once the listener bus has delivered them)."""
+    sc = spark.sparkContext
+    group = f"job-ids-{next(_JOB_GROUPS)}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setJobDescription(None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return sorted(sc.statusTracker().getJobIdsForGroup(group))
 
 
 @pytest.fixture(scope="session")

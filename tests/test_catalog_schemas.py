@@ -13,6 +13,7 @@ import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
+from conftest import job_ids
 from telecom_dataengineering_pipeline_spark.queries.registry import REGISTRY
 from telecom_dataengineering_pipeline_spark.sources.catalog import TABLES, load_table
 
@@ -100,14 +101,5 @@ def test_nanosecond_ts_read_as_micros(spark, sf_smoke, tmp_path):
 def test_query_build_runs_no_spark_job(spark, sf_smoke, name):
     """Building a bench query plans it and nothing else: the input tables
     need no schema-inference job."""
-    sc = spark.sparkContext
-    group = f"build-{name}"
-    sc.setJobGroup(group, group)
-    try:
-        REGISTRY[name].fn(spark, sf_smoke)
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setJobDescription(None)
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    jobs = list(sc.statusTracker().getJobIdsForGroup(group))
+    jobs = job_ids(spark, lambda: REGISTRY[name].fn(spark, sf_smoke))
     assert jobs == [], f"{name} ran {len(jobs)} job(s) while being built"

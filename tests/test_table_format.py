@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from telecom_dataengineering_pipeline_spark.sources.table_format import ParquetDirSink, TableSink
@@ -35,6 +36,31 @@ def test_parquet_sink_create_merge_read(spark, tmp_path):
     # no staging/retired residue (the swap completed cleanly)
     assert not os.path.exists(table + "__staging")
     assert not os.path.exists(table + "__retired")
+
+
+def test_parquet_sink_merge_rejects_misaligned_source(spark, tmp_path):
+    """A source missing a table column, or carrying one the table lacks,
+    raises before any rewrite, and the table keeps its rows and columns."""
+    table = str(tmp_path / "orders_t")
+    sink = ParquetDirSink(partition_by=("bucket",))
+    sink.create_or_replace(
+        spark.createDataFrame([(1, "a", 1, 10), (2, "b", 1, 20)], "id long, payload string, version int, bucket int"),
+        table,
+    )
+
+    def snapshot():
+        df = spark.read.parquet(table)
+        return sorted(df.columns), sorted(tuple(r) for r in df.select(sorted(df.columns)).collect())
+
+    before = snapshot()
+    for ddl, row in (
+        ("id long, version int, bucket int", (2, 2, 20)),
+        ("id long, payload string, version int, bucket int, note string", (2, "b2", 2, 20, "x")),
+    ):
+        src = spark.createDataFrame([row], ddl)
+        with pytest.raises(ValueError, match="not aligned"):
+            sink.merge_keep_latest(spark, table, src, keys=["id"], order_by=[F.col("version").desc()])
+        assert snapshot() == before
 
 
 def test_sink_contract_call_sequence(spark, tmp_path):

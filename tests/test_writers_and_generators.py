@@ -26,6 +26,10 @@ def test_partitioned_write_layout_and_pruning(spark, sf_smoke):
         write_partitioned(ev, path)
         days = [p for p in os.listdir(path) if p.startswith("year=")]
         assert days, "expected hive-style year= partitions"
+        # one parquet file in each partition directory (the rebalance hint)
+        leaves = [(r, [n for n in ns if n.endswith(".parquet")]) for r, sub, ns in os.walk(path) if not sub]
+        assert len(leaves) > 1 and all(os.path.basename(r).startswith("day=") for r, _ in leaves)
+        assert {r: len(fs) for r, fs in leaves if len(fs) != 1} == {}
         back = spark.read.parquet(path)
         # partition filter must prune: read one day and check the plan scans
         # only matching partitions (PartitionFilters present)

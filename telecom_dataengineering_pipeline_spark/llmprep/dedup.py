@@ -3,10 +3,12 @@
 Scale design (the point of each variant):
 
 - **exact**: one hash + one groupBy — the cheapest pass, always run first.
-- **n-gram Jaccard (exact)**: shingle-explode + equi-join on hashed shingle.
-  Correct but O(sum of per-shingle doc-frequency²) — the *oracle*, viable
-  when shingle frequencies are bounded; at 100 TB use it only on LSH
-  candidates.
+- **n-gram Jaccard / containment (exact)** and **winnowing pairs**:
+  shingle (or fingerprint) explode, then the co-occurrence core
+  (``operators/pairs.py::_cooccur``) groups by the hash and counts shared
+  items per doc pair. Correct but O(sum of per-shingle doc-frequency²) —
+  the *oracle*, viable when shingle frequencies are bounded (``max_df`` is
+  the core's group cap); at 100 TB use it only on LSH candidates.
 - **MinHash + LSH**: the scale path. Per-doc signature (narrow shuffle),
   band→bucket equi-join for candidates (no all-pairs anywhere), exact
   Jaccard verification only on candidates. All hashing is md5-derived and
@@ -29,6 +31,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..operators.pairs import _capped, _pairs
 from .text import normalized_fingerprint, token_hash32, tokens
 
 # This module ships a Python closure to executors (the mapInPandas matmul in
@@ -148,50 +151,46 @@ def jaccard_pairs(
 ) -> DataFrame:
     """Exact n-gram Jaccard near-dup pairs (doc1 < doc2, j >= threshold).
 
-    Intersection via equi-join on a 64-bit shingle hash (same counts as the
-    string join — collision odds ~n²/2⁶⁴ — with a far narrower shuffle);
-    union = |A| + |B| − |A∩B|.
+    Intersection via the co-occurrence core grouped on a 64-bit shingle
+    hash (same counts as grouping on the string — collision odds ~n²/2⁶⁴ —
+    with a far narrower shuffle); union = |A| + |B| − |A∩B|.
 
-    ``max_df`` guards the quadratic blowup: the self-join costs
+    ``max_df`` guards the quadratic blowup: pair generation costs
     O(Σ per-shingle document-frequency²), so one boilerplate shingle shared
-    by 1 M docs is a 10¹²-row join.  Shingles with df > max_df are removed
-    from the universe before the join — on BOTH numerator and denominator
+    by 1 M docs is 10¹² pairs.  Shingles with df > max_df are removed
+    from the universe before pairing — on BOTH numerator and denominator
     (stopword semantics), so jaccard stays a true set similarity over the
     informative shingles.  Pairs whose overlap is only boilerplate are
     exactly the pairs MinHash-LSH (the scale path) also rejects.  Pass
     ``max_df=None`` for literal all-shingles semantics.
     """
+    ov = _shingle_overlap(docs, text_col, id_col, n, max_df)
+    j = F.col("n_co").cast("double") / (F.col("n1") + F.col("n2") - F.col("n_co"))
+    return ov.select(
+        F.col("i").alias("doc1"), F.col("j").alias("doc2"), F.round(j, 6).alias("jaccard")
+    ).filter(F.col("jaccard") >= threshold)
+
+
+def _shingle_overlap(
+    docs: DataFrame, text_col: str, id_col: str, n: int, max_df: int | None
+) -> DataFrame:
+    """``(i, j, n_co, n1, n2)``: every doc pair ``i < j`` sharing an
+    informative shingle, the count of shared shingles and each side's
+    informative-shingle count — :func:`jaccard_pairs` and
+    :func:`containment_pairs` differ only in their ratio over it.
+
+    The co-occurrence core's cap drops shingles held by more than
+    ``max_df`` docs; the doc sizes are counted from those same capped
+    rows, so the cap applies to numerator and denominator alike. The
+    capped rows are cut once: they feed both the sizes and the pair
+    self-join."""
     stream = shingle_stream(docs, text_col, id_col, n)
     ex = stream.select("doc_id", F.xxhash64("shingle").alias("shingle_h"))
-    if max_df is not None:
-        # One shuffle on shingle_h: count df with a window on the same
-        # partitioning the join needs anyway, filter inline.
-        dfw = Window.partitionBy("shingle_h")
-        ex = (
-            ex.withColumn("_df", F.count(F.lit(1)).over(dfw))
-            .filter(F.col("_df") <= max_df)
-            .drop("_df")
-        )
-    # Three consumers below (both self-join sides + sizes): materialize the
-    # narrow hashed stream once instead of re-running the shingle spine.
-    ex = ex.transform(lineage_cut)
-    sizes = ex.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_shingles"))
-    a = ex.alias("a")
-    b = ex.alias("b")
-    inter = (
-        a.join(b, (F.col("a.shingle_h") == F.col("b.shingle_h")) & (F.col("a.doc_id") < F.col("b.doc_id")))
-        .groupBy(F.col("a.doc_id").alias("doc1"), F.col("b.doc_id").alias("doc2"))
-        .agg(F.count(F.lit(1)).alias("inter"))
-    )
-    sa = sizes.alias("sa")
-    sb = sizes.alias("sb")
-    j = F.col("inter").cast("double") / (F.col("sa.n_shingles") + F.col("sb.n_shingles") - F.col("inter"))
-    return (
-        inter.join(sa, F.col("doc1") == F.col("sa.doc_id"))
-        .join(sb, F.col("doc2") == F.col("sb.doc_id"))
-        .select("doc1", "doc2", F.round(j, 6).alias("jaccard"))
-        .filter(F.col("jaccard") >= threshold)
-    )
+    capped = _capped(ex, "shingle_h", "doc_id", max_df).transform(lineage_cut)
+    sizes = capped.groupBy("x").agg(F.count(F.lit(1)).alias("n_shingles"))
+    s1 = sizes.select(F.col("x").alias("i"), F.col("n_shingles").alias("n1"))
+    s2 = sizes.select(F.col("x").alias("j"), F.col("n_shingles").alias("n2"))
+    return _pairs(capped).join(s1, "i").join(s2, "j")
 
 
 def _hash31(col: Column, engine_neutral: bool) -> Column:
@@ -903,7 +902,8 @@ def cosine_dup_pairs(
     use ``jaccard_pairs`` / ``minhash_near_dup_pairs``, whose set-level
     blocking has no such floor."""
     tfd = hashed_tf_dims(docs, dims, text_col, id_col)
-    vecs = hashed_tf_vectors(tfd, dims).persist()
+    # Cut once: the vectors feed the bucket projection and both verify sides.
+    vecs = hashed_tf_vectors(tfd, dims).transform(lineage_cut)
     # Materialize the banded buckets once: the self-join would otherwise run
     # the whole signature pipeline (incl. the mapInPandas projection) once
     # per side.
@@ -1176,45 +1176,17 @@ def containment_pairs(
     Jaccard misses the quote/excerpt case — a 200-token document embedded
     verbatim in a 20k-token one has J ≈ |A|/|B| ≈ 0.01 but containment 1.0;
     dedup pipelines drop (or attribute) such pairs separately from
-    symmetric near-dups. Same single-exchange shingle-hash spine and
-    ``max_df`` stopword cap as :func:`jaccard_pairs` (the quadratic guard
-    applies identically), one extra ``least`` in the final ratio. For the
+    symmetric near-dups. Same shingle-hash overlap and ``max_df`` stopword
+    cap as :func:`jaccard_pairs` (:func:`_shingle_overlap`); only the
+    final ratio differs. For the
     100 TB path the same banded MinHash-LSH candidates work: containment
     ≥ t implies Jaccard ≥ t·|A|/(|A|+|B|), so bands tuned for the target
     size ratio recover candidates before this exact verify."""
-    stream = shingle_stream(docs, text_col, id_col, n)
-    ex = stream.select("doc_id", F.xxhash64("shingle").alias("shingle_h"))
-    if max_df is not None:
-        dfw = Window.partitionBy("shingle_h")
-        ex = (
-            ex.withColumn("_df", F.count(F.lit(1)).over(dfw))
-            .filter(F.col("_df") <= max_df)
-            .drop("_df")
-        )
-    ex = ex.transform(lineage_cut)
-    sizes = ex.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_shingles"))
-    a = ex.alias("a")
-    b = ex.alias("b")
-    inter = (
-        a.join(
-            b,
-            (F.col("a.shingle_h") == F.col("b.shingle_h"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .groupBy(F.col("a.doc_id").alias("doc1"), F.col("b.doc_id").alias("doc2"))
-        .agg(F.count(F.lit(1)).alias("inter"))
-    )
-    sa = sizes.alias("sa")
-    sb = sizes.alias("sb")
-    c = F.col("inter").cast("double") / F.least(
-        F.col("sa.n_shingles"), F.col("sb.n_shingles")
-    )
-    return (
-        inter.join(sa, F.col("doc1") == F.col("sa.doc_id"))
-        .join(sb, F.col("doc2") == F.col("sb.doc_id"))
-        .select("doc1", "doc2", F.round(c, 6).alias("containment"))
-        .filter(F.col("containment") >= threshold)
-    )
+    ov = _shingle_overlap(docs, text_col, id_col, n, max_df)
+    c = F.col("n_co").cast("double") / F.least(F.col("n1"), F.col("n2"))
+    return ov.select(
+        F.col("i").alias("doc1"), F.col("j").alias("doc2"), F.round(c, 6).alias("containment")
+    ).filter(F.col("containment") >= threshold)
 
 
 def winnowing_fingerprints(
@@ -1297,30 +1269,23 @@ def winnowing_pairs(
     max_df: int | None = 1000,
 ) -> DataFrame:
     """Near-duplicate candidate pairs by shared winnowing fingerprints —
-    the MOSS pairing stage. Same quadratic guard as the shingle/minhash
-    joins: fingerprints held by more than ``max_df`` docs are dropped
-    before the self-join (boilerplate hashes otherwise fan out df²), and
-    only fingerprints shared by ≥2 docs enter it at all. Returns
+    the MOSS pairing stage, on the co-occurrence core grouped by
+    fingerprint. Same quadratic guard as the shingle/minhash joins:
+    fingerprints held by more than ``max_df`` docs are dropped before pair
+    generation (boilerplate hashes otherwise fan out df²). Returns
     (doc_a, doc_b, n_shared) for pairs sharing at least ``min_shared``
     selected fingerprints."""
-    # lineage cut: fp feeds the df-count AND both sides of the self-join —
-    # without it the whole tokenize→hash→winnow pipeline re-runs 4×
-    # (FileScan-count audit, round-9 session 3)
-    fp = winnowing_fingerprints(docs, text_col, id_col, k=k, w=w).transform(lineage_cut)
-    per_fp = fp.groupBy("fp_hash").agg(F.count(F.lit(1)).alias("_df"))
-    lo, hi = 2, max_df if max_df is not None else None
-    keep = per_fp.filter(
-        (F.col("_df") >= lo) & ((F.col("_df") <= hi) if hi is not None else F.lit(True))
-    ).select("fp_hash")
-    shared = fp.join(keep, "fp_hash")
-    a, b = shared.alias("a"), shared.alias("b")
+    # lineage cut after the core's cap: the capped fingerprints feed both
+    # sides of the self-join — without it the whole tokenize→hash→winnow
+    # pipeline (and the cap's window) re-runs per side
+    fp = winnowing_fingerprints(docs, text_col, id_col, k=k, w=w)
+    capped = _capped(fp, "fp_hash", "doc_id", max_df).transform(lineage_cut)
     return (
-        a.join(
-            b,
-            (F.col("a.fp_hash") == F.col("b.fp_hash"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
+        _pairs(capped)
+        .filter(F.col("n_co") >= min_shared)
+        .select(
+            F.col("i").alias("doc_a"),
+            F.col("j").alias("doc_b"),
+            F.col("n_co").alias("n_shared"),
         )
-        .groupBy(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .agg(F.count(F.lit(1)).cast("long").alias("n_shared"))
-        .filter(F.col("n_shared") >= min_shared)
     )

@@ -6,7 +6,10 @@ round's state and releases the rounds it supersedes; PageRank cuts no
 round, and betweenness keeps every level for its backward pass.
 
 Complements the connected-components tier (``llmprep/dedup.py``
-large-star/small-star) with the other workhorse graph primitives.
+large-star/small-star) with the other workhorse graph primitives. The
+link predictors (:func:`neighborhood_jaccard`, :func:`adamic_adar_scores`)
+are the co-occurrence core (``pairs._cooccur``, the shared neighbor as
+the group) plus their scores.
 PageRank's Pregel shape per iteration: contributions flow along edges
 (join rank → edges), aggregate at the destination (map-side-combined
 sum), recombine with the teleport term — ranks and edges shuffle on node
@@ -29,9 +32,10 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from ..lineage import iterate, lineage_cut
+from .pairs import _cooccur
 
 
 def parity_encode(key, odd: bool):
@@ -291,6 +295,28 @@ def k_core(edges: DataFrame, k: int, rounds: int = 10) -> DataFrame:
     return surviving.select(F.col("u").alias("node")).distinct()
 
 
+def _undirected(edges: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """``(both, deg)``: the canonical undirected edge set in both directions
+    ``(u, v)``, and each node's degree. Canonicalized defensively: if the
+    input carries both (u,v) and (v,u), a bare distinct() keeps both and
+    every degree and common-neighbor count would double. The edge set is
+    cut once — it fans out into both union arms, the degree count and the
+    pair core, and Spark does not dedupe shared subtrees, so without the
+    cut the whole upstream edge derivation (often a join/explode pipeline)
+    re-executes per reference."""
+    e = (
+        edges.select(
+            F.least("u", "v").alias("u"), F.greatest("u", "v").alias("v")
+        )
+        .filter(F.col("u") != F.col("v"))
+        .distinct()
+        .transform(lineage_cut)
+    )
+    both = e.unionAll(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
+    deg = both.groupBy("u").agg(F.count(F.lit(1)).cast("long").alias("deg"))
+    return both, deg
+
+
 def neighborhood_jaccard(
     edges: DataFrame,
     max_hub_degree: int | None = None,
@@ -302,67 +328,50 @@ def neighborhood_jaccard(
     (Liben-Nowell & Kleinberg 2003) behind "customers also bought" and
     churn-affinity rollups.
 
-    Scale shape: candidate pairs come from ONE equi-join through the
-    shared neighbor (a wedge per common neighbor — never an all-pairs
-    product), counted with a map-side-combined aggregate; degrees join
-    back on the node keys. ``max_hub_degree`` is the skew guard every
-    production run sets: a hub of degree d contributes d² wedges, so
-    super-hubs (the dedup tier's ``max_df`` analog) are dropped from
-    WEDGE GENERATION while still counting toward each node's own degree
-    (the denominator stays honest). Returns (u, v, common, jaccard)
-    with u < v, jaccard rounded to 6 for cross-engine hashing.
+    Scale shape: candidate pairs come from the co-occurrence core
+    (``pairs._cooccur``) with the shared neighbor as the group — a wedge
+    per common neighbor, never an all-pairs product — counted with a
+    map-side-combined aggregate; degrees join back on the node keys.
+    ``max_hub_degree`` is the skew guard every production run sets: a hub
+    of degree d contributes d²/2 wedges, so super-hubs (the dedup tier's
+    ``max_df`` analog) are dropped from WEDGE GENERATION while still
+    counting toward each node's own degree (the denominator stays honest).
+    Returns (u, v, common, jaccard) with u < v, jaccard rounded to 6 for
+    cross-engine hashing.
 
     ``edges``: undirected distinct pairs (u, v).
     """
-    # Canonicalize defensively: if the input carries both (u,v) and (v,u),
-    # a bare distinct() keeps both and the union below would double every
-    # degree and common-neighbor count — silently wrong jaccards.
-    e = (
-        edges.select(
-            F.least("u", "v").alias("u"), F.greatest("u", "v").alias("v")
-        )
-        .filter(F.col("u") != F.col("v"))
-        .distinct()
-        # The edge set fans out into FIVE downstream references (two union
-        # arms, the degree count, both wedge sides): Spark does not dedupe
-        # shared subtrees, so without this the whole upstream edge
-        # derivation (often a join/explode pipeline) re-executes per
-        # reference. Lazy: materializes executor-local on first use.
-        .transform(lineage_cut)
+    both, deg = _undirected(edges)
+    common = _cooccur(both, "v", "u", max_hub_degree).filter(
+        F.col("n_co") >= min_common
     )
-    both = e.unionAll(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
-    deg = both.groupBy("u").agg(F.count(F.lit(1)).cast("long").alias("deg"))
-    wedge_src = both
-    if max_hub_degree is not None:
-        hubs = deg.filter(F.col("deg") > max_hub_degree).select("u")
-        # drop wedges THROUGH a hub: filter the shared-neighbor side (v)
-        wedge_src = both.join(
-            hubs.select(F.col("u").alias("v")), "v", "left_anti"
-        )
-    a = wedge_src.select(F.col("u").alias("a"), F.col("v").alias("w"))
-    b = wedge_src.select(F.col("u").alias("b"), F.col("v").alias("w"))
-    common = (
-        a.join(b, "w")
-        .filter(F.col("a") < F.col("b"))
-        .groupBy("a", "b")
-        .agg(F.count(F.lit(1)).cast("long").alias("common"))
-        .filter(F.col("common") >= min_common)
-    )
-    da = deg.select(F.col("u").alias("a"), F.col("deg").alias("deg_a"))
-    db = deg.select(F.col("u").alias("b"), F.col("deg").alias("deg_b"))
+    da = deg.select(F.col("u").alias("i"), F.col("deg").alias("deg_a"))
+    db = deg.select(F.col("u").alias("j"), F.col("deg").alias("deg_b"))
     return (
-        common.join(da, "a")
-        .join(db, "b")
+        common.join(da, "i")
+        .join(db, "j")
         .select(
-            F.col("a").alias("u"),
-            F.col("b").alias("v"),
-            "common",
+            F.col("i").alias("u"),
+            F.col("j").alias("v"),
+            F.col("n_co").alias("common"),
             F.round(
-                F.col("common").cast("double")
-                / (F.col("deg_a") + F.col("deg_b") - F.col("common")),
+                F.col("n_co").cast("double")
+                / (F.col("deg_a") + F.col("deg_b") - F.col("n_co")),
                 6,
             ).alias("jaccard"),
         )
+    )
+
+
+def _adamic_adar_weight(deg: Column) -> Column:
+    """round(1/ln(deg), 9) as DECIMAL: ln() may differ by an ulp across
+    engines and double addition is partition-order-dependent, so the sum
+    runs over exact decimals (the BM25 recipe). A degree-1 neighbor
+    centers no wedge but its weight may still be evaluated — guarded, or
+    ANSI mode errors on 1/ln(1)."""
+    return (
+        F.when(deg >= 2, F.round(F.lit(1.0) / F.log(deg.cast("double")), 9))
+        .cast("decimal(22,9)")
     )
 
 
@@ -378,61 +387,24 @@ def adamic_adar_scores(
     sharing a best-seller), the standard upgrade over raw Jaccard for
     "also-bought" ranking.
 
-    Scale shape matches :func:`neighborhood_jaccard`: canonicalized
-    edges checkpoint once and fan out, wedges come from ONE equi-join
-    through the shared neighbor with the ``max_hub_degree`` guard (hubs
-    stop generating wedges — which also caps the d² blowup exactly where
-    1/ln(deg) says the signal is weakest). Determinism: the per-neighbor
-    weight is round(1/ln(deg), 9) cast to DECIMAL before the per-pair
-    sum — ln() may differ by an ulp across engines and double addition
-    is partition-order-dependent; round-then-decimal makes the sum exact
-    (the BM25 recipe). deg(w) ≥ 2 for every wedge center by
-    construction, so ln is never 0. Returns (u, v, common, aa_score)
-    with u < v, aa_score rounded to 6."""
-    e = (
-        edges.select(
-            F.least("u", "v").alias("u"), F.greatest("u", "v").alias("v")
-        )
-        .filter(F.col("u") != F.col("v"))
-        .distinct()
-        .transform(lineage_cut)
-    )
-    both = e.unionAll(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
-    deg = both.groupBy("u").agg(F.count(F.lit(1)).cast("long").alias("deg"))
-    wedge_src = both
-    if max_hub_degree is not None:
-        hubs = deg.filter(F.col("deg") > max_hub_degree).select("u")
-        wedge_src = both.join(
-            hubs.select(F.col("u").alias("v")), "v", "left_anti"
-        )
-    # the weight is a property of the SHARED neighbor — attach it to the
-    # wedge rows before the self-join so no per-pair weight lookup exists
-    wd = deg.select(F.col("u").alias("v"), F.col("deg").alias("_dw"))
-    weighted = wedge_src.join(wd, "v").select(
-        "u",
-        F.col("v").alias("w"),
-        # deg-1 neighbors can never CENTER a wedge (the a<b self-join
-        # needs two rows on w) but their weight expression still
-        # evaluates here — guard it or ANSI mode errors on 1/ln(1)
-        F.when(
-            F.col("_dw") >= 2,
-            F.round(F.lit(1.0) / F.log(F.col("_dw").cast("double")), 9),
-        )
-        .cast("decimal(22,9)")
-        .alias("_aw"),
-    )
-    a = weighted.select(F.col("u").alias("a"), "w", F.col("_aw").alias("_w1"))
-    b = weighted.select(F.col("u").alias("b"), "w")
+    Scale shape matches :func:`neighborhood_jaccard`: the same core with
+    the same ``max_hub_degree`` guard (hubs stop generating wedges — which
+    also caps the d² blowup exactly where 1/ln(deg) says the signal is
+    weakest). deg(w) is the shared neighbor's group size in the core, so
+    the weight is the core's per-group weight and needs no degree lookup.
+    Determinism: see :func:`_adamic_adar_weight`; the per-pair decimal sum
+    is exact. Returns (u, v, common, aa_score) with u < v, aa_score
+    rounded to 6."""
+    both, _ = _undirected(edges)
     return (
-        a.join(b, "w")
-        .filter(F.col("a") < F.col("b"))
-        .groupBy("a", "b")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("common"),
-            F.round(F.sum("_w1").cast("double"), 6).alias("aa_score"),
+        _cooccur(both, "v", "u", max_hub_degree, weight=_adamic_adar_weight)
+        .filter(F.col("n_co") >= min_common)
+        .select(
+            F.col("i").alias("u"),
+            F.col("j").alias("v"),
+            F.col("n_co").alias("common"),
+            F.round(F.col("w").cast("double"), 6).alias("aa_score"),
         )
-        .filter(F.col("common") >= min_common)
-        .select(F.col("a").alias("u"), F.col("b").alias("v"), "common", "aa_score")
     )
 
 

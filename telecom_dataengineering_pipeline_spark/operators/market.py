@@ -3,16 +3,16 @@ relations, the co-purchase analytics tier next to the graph operators
 (``graph.py`` treats co-occurrence as edges; this treats it as RULES with
 support/confidence/lift semantics).
 
-Classic Apriori insight, Spark-first: frequent ITEMS are computed before
-any pair is generated (the anti-monotone prune — a pair can't reach
-``min_support`` unless both items do), so the quadratic per-basket
-fan-out runs over the pruned item stream only. The remaining skew knob is
-basket size: a mega-basket (a crawler account touching every item) emits
-|B|²/2 pairs, so ``max_basket_size`` drops baskets whose PRUNED size (the
-actual pair fan-out) exceeds the cap — the
-``max_hub_degree`` discipline from ``graph.neighborhood_jaccard``, with
-the same honesty property (surviving baskets' counts are exact; the cap
-is a documented coverage bound, not silent truncation).
+Every operator here is the co-occurrence core (``pairs._cooccur``) plus
+its score. Classic Apriori insight, Spark-first: frequent ITEMS are
+computed before any pair is generated (the anti-monotone prune — a pair
+can't reach ``min_support`` unless both items do), so the quadratic
+per-basket fan-out runs over the pruned item stream only. The remaining
+skew knob is basket size: a mega-basket (a crawler account touching every
+item) emits |B|²/2 pairs, so ``max_basket_size`` is the core's group cap
+on the PRUNED basket (the actual pair fan-out). Surviving baskets' counts
+are exact; the cap is a documented coverage bound, not silent truncation.
+Item totals are counted before the cap.
 """
 
 from __future__ import annotations
@@ -20,6 +20,40 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from ..lineage import lineage_cut
+from .pairs import _cooccur
+
+
+def _frequent(
+    df: DataFrame, group_col: str, item_col: str, group: str, min_count: int
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """``(rel, frequent, pruned)``: the distinct ``(group, item)`` relation
+    (cut once: it feeds the item counts and the pruned stream), the items
+    held by at least ``min_count`` groups with their count ``n``, and
+    ``rel`` restricted to those items (a broadcast join)."""
+    rel = (
+        df.select(F.col(group_col).alias(group), F.col(item_col).alias("item"))
+        .distinct()
+        .transform(lineage_cut)
+    )
+    counts = rel.groupBy("item").agg(F.count(F.lit(1)).cast("long").alias("n"))
+    frequent = counts.filter(F.col("n") >= int(min_count))
+    return rel, frequent, rel.join(F.broadcast(frequent.select("item")), "item")
+
+
+def _both_ways(pairs: DataFrame) -> DataFrame:
+    """``(i, j, n_co)`` in both directions from the canonical ``i < j``
+    pairs. A map-side explode, not a union of a swapped projection: the
+    union's second branch would re-execute the whole pair aggregate (Spark
+    does not dedupe shared subtrees); the explode doubles rows inside the
+    same stage."""
+    return pairs.select(
+        F.explode(
+            F.array(
+                F.struct("i", "j", "n_co"),
+                F.struct(F.col("j").alias("i"), F.col("i").alias("j"), "n_co"),
+            )
+        ).alias("p")
+    ).select("p.i", "p.j", "p.n_co")
 
 
 def association_rules(
@@ -31,12 +65,11 @@ def association_rules(
 ) -> DataFrame:
     """Pairwise association rules A → B with support / confidence / lift.
 
-    Pipeline: distinct (basket, item) → item supports (map-side combine)
-    → anti-monotone prune at ``min_support`` → per-basket self-join on
-    the pruned stream with ``item_a < item_b`` canonical election (each
-    unordered pair counted once, the interval-join trick) → pair counts
-    → both rule directions emitted from the canonical pair with the item
-    supports joined back via two broadcast-sized lookups.
+    Pipeline: distinct (basket, item) → item supports → anti-monotone
+    prune at ``min_support`` → pair counts from the co-occurrence core
+    (each unordered pair counted once) → both rule directions emitted
+    from the canonical pair with the item supports joined back via two
+    broadcast-sized lookups.
 
     Scale shape: the only basket-keyed shuffle carries the PRUNED item
     stream; pair counting is one map-side-combined aggregate on the pair
@@ -50,65 +83,23 @@ def association_rules(
     DIRECTION, support = pair_count/n_baskets."""
     if min_support < 1:
         raise ValueError("min_support must be >= 1")
-    bi = (
-        df.select(
-            F.col(basket_col).alias("basket"), F.col(item_col).alias("item")
-        )
-        .distinct()
-        .transform(lineage_cut)
-    )
+    bi, frequent, pruned = _frequent(df, basket_col, item_col, "basket", min_support)
     totals = bi.agg(
         F.count_distinct(F.col("basket")).cast("long").alias("n_baskets")
     )
-    supports = bi.groupBy("item").agg(
-        F.count(F.lit(1)).cast("long").alias("item_count")
+    pairs = _cooccur(pruned, "basket", "item", max_basket_size).filter(
+        F.col("n_co") >= int(min_support)
     )
-    frequent = supports.filter(F.col("item_count") >= int(min_support))
-    pruned = bi.join(F.broadcast(frequent.select("item")), "item")
-    if max_basket_size is not None:
-        sizes = pruned.groupBy("basket").agg(
-            F.count(F.lit(1)).alias("_bsz")
-        )
-        pruned = pruned.join(
-            F.broadcast(sizes.filter(F.col("_bsz") <= int(max_basket_size))).select(
-                "basket"
-            ),
-            "basket",
-        )
-    a = pruned.select("basket", F.col("item").alias("item_a"))
-    b = pruned.select("basket", F.col("item").alias("item_b"))
-    pairs = (
-        a.join(b, "basket")
-        .filter(F.col("item_a") < F.col("item_b"))
-        .groupBy("item_a", "item_b")
-        .agg(F.count(F.lit(1)).cast("long").alias("pair_count"))
-        .filter(F.col("pair_count") >= int(min_support))
+    both = _both_ways(pairs).select(
+        F.col("i").alias("antecedent"),
+        F.col("j").alias("consequent"),
+        F.col("n_co").alias("pair_count"),
     )
-    # Both rule directions via a map-side explode instead of a union of a
-    # swapped projection — the union's second branch re-executes the pair
-    # aggregate (shared subtrees are not deduped); the explode doubles
-    # rows inside the same stage. See item_item_cosine_topk.
-    both = pairs.select(
-        F.explode(
-            F.array(
-                F.struct(
-                    F.col("item_a").alias("antecedent"),
-                    F.col("item_b").alias("consequent"),
-                    F.col("pair_count").alias("pair_count"),
-                ),
-                F.struct(
-                    F.col("item_b").alias("antecedent"),
-                    F.col("item_a").alias("consequent"),
-                    F.col("pair_count").alias("pair_count"),
-                ),
-            )
-        ).alias("p")
-    ).select("p.antecedent", "p.consequent", "p.pair_count")
     ac = frequent.select(
-        F.col("item").alias("antecedent"), F.col("item_count").alias("antecedent_count")
+        F.col("item").alias("antecedent"), F.col("n").alias("antecedent_count")
     )
     cc = frequent.select(
-        F.col("item").alias("consequent"), F.col("item_count").alias("consequent_count")
+        F.col("item").alias("consequent"), F.col("n").alias("consequent_count")
     )
     out = (
         both.join(F.broadcast(ac), "antecedent")
@@ -150,14 +141,11 @@ def item_item_cosine_topk(
     sets); this ranks NEIGHBORS per item with the cosine that discounts
     blockbuster items (√ of both popularities in the denominator).
 
-    Scale shape: identical pair discipline to :func:`association_rules`
-    — distinct interactions, anti-monotone ``min_count`` item prune
-    BEFORE the per-user fan-out, ``max_basket_size`` cap on the pruned
-    basket (the hub guard), canonical ``i < j`` election so each pair
-    aggregates once, both directions emitted from the canonical pair
-    relation (pair-grain, metadata-sized), item counts joined back as a
-    broadcast. The final top-k is a WindowGroupLimit-prunable
-    row_number over (item, cosine desc).
+    Scale shape: the same prune and core as :func:`association_rules`
+    (``max_basket_size`` caps the pruned basket — the hub guard), both
+    directions emitted from the canonical pair relation, item counts
+    joined back as a broadcast. The final top-k is a
+    WindowGroupLimit-prunable row_number over (item, cosine desc).
 
     Determinism: all counts exact LONGs; cosine is one fixed-shape
     double expression co/√(nᵢ·nⱼ) ROUNDED to 6 and the neighbor rank
@@ -169,50 +157,10 @@ def item_item_cosine_topk(
         raise ValueError("item_item_cosine_topk needs k >= 1")
     if min_count < 1:
         raise ValueError("min_count must be >= 1")
-    ui = (
-        df.select(F.col(user_col).alias("user"), F.col(item_col).alias("item"))
-        .distinct()
-        .transform(lineage_cut)
-    )
-    counts = ui.groupBy("item").agg(F.count(F.lit(1)).cast("long").alias("n_item"))
-    frequent = counts.filter(F.col("n_item") >= int(min_count))
-    pruned = ui.join(F.broadcast(frequent.select("item")), "item")
-    if max_basket_size is not None:
-        sizes = pruned.groupBy("user").agg(F.count(F.lit(1)).alias("_bsz"))
-        pruned = pruned.join(
-            F.broadcast(sizes.filter(F.col("_bsz") <= int(max_basket_size))).select(
-                "user"
-            ),
-            "user",
-        )
-    a = pruned.select("user", F.col("item").alias("i"))
-    b = pruned.select("user", F.col("item").alias("j"))
-    pairs = (
-        a.join(b, "user")
-        .filter(F.col("i") < F.col("j"))
-        .groupBy("i", "j")
-        .agg(F.count(F.lit(1)).cast("long").alias("n_co"))
-    )
-    # Emit both neighbor directions with a map-side explode instead of a
-    # union of a swapped projection: the union's second branch re-executes
-    # the whole pair aggregate (Spark does not dedupe shared subtrees —
-    # runtime exchange reuse saves the shuffle write but the final
-    # aggregate + downstream still run per branch); the explode doubles
-    # rows inside the same stage for free.
-    both = pairs.select(
-        F.explode(
-            F.array(
-                F.struct(
-                    F.col("i").alias("i"), F.col("j").alias("j"), F.col("n_co").alias("n_co")
-                ),
-                F.struct(
-                    F.col("j").alias("i"), F.col("i").alias("j"), F.col("n_co").alias("n_co")
-                ),
-            )
-        ).alias("p")
-    ).select("p.i", "p.j", "p.n_co")
-    ni = frequent.select(F.col("item").alias("i"), F.col("n_item").alias("n_item"))
-    nj = frequent.select(F.col("item").alias("j"), F.col("n_item").alias("n_neighbor"))
+    _, frequent, pruned = _frequent(df, user_col, item_col, "user", min_count)
+    both = _both_ways(_cooccur(pruned, "user", "item", max_basket_size))
+    ni = frequent.select(F.col("item").alias("i"), F.col("n").alias("n_item"))
+    nj = frequent.select(F.col("item").alias("j"), F.col("n").alias("n_neighbor"))
     scored = (
         both.join(F.broadcast(ni), "i")
         .join(F.broadcast(nj), "j")
@@ -255,9 +203,9 @@ def cohort_overlap_matrix(
     inside baskets; this profiles label AUDIENCES over units).
 
     Scale shape: memberships dedup to the (unit, label) grain, then the
-    per-unit label-set fan-out is alphabet-bounded (labels per unit ≤
-    |labels| — event types, segments, plans; NOT items) before one
-    map-side-combined pair count. Label totals ride a broadcast join;
+    co-occurrence core's per-unit label-set fan-out is alphabet-bounded
+    (labels per unit ≤ |labels| — event types, segments, plans; NOT
+    items), so it needs no cap. Label totals ride a broadcast join;
     nothing quadratic in units.
 
     Determinism: counts exact; jaccard/lift fixed-shape doubles rounded
@@ -271,21 +219,8 @@ def cohort_overlap_matrix(
     n_units = m.select("u").distinct().agg(
         F.count(F.lit(1)).cast("long").alias("n_units")
     )
-    sets = m.groupBy("u").agg(F.sort_array(F.collect_set("l")).alias("ls"))
-    pairs = (
-        sets.select(
-            F.explode(
-                F.flatten(
-                    F.expr(
-                        "transform(ls, (x, i) -> "
-                        "transform(slice(ls, i + 2, size(ls)), "
-                        "y -> struct(x AS a, y AS b)))"
-                    )
-                )
-            ).alias("p")
-        )
-        .groupBy(F.col("p.a").alias("label_a"), F.col("p.b").alias("label_b"))
-        .agg(F.count(F.lit(1)).cast("long").alias("n_both"))
+    pairs = _cooccur(m, "u", "l").select(
+        F.col("i").alias("label_a"), F.col("j").alias("label_b"), F.col("n_co").alias("n_both")
     )
     ta = totals.select(F.col("l").alias("label_a"), F.col("n").alias("n_a"))
     tb = totals.select(F.col("l").alias("label_b"), F.col("n").alias("n_b"))

@@ -7,12 +7,12 @@ lives in), so one copy of the tool can dump an older checkout, such as a
 ``git worktree`` of a parent commit, without copying files into it. The
 default names are the bench set. One ``<name>.txt`` is written per query.
 Expression ids (``#123``), ``plan_id=``, the per-process lambda variable
-counter (``x_12``) and ``merge_upsert_orders_txnlog``'s scratch table path
-past ``txnlog_merge_<sf>`` (a pid, then per-write file ids) are masked, so
-two dumps of the
-same plan, from any two processes, are byte-identical and ``diff -r``
-between two output directories shows only real plan changes. A lineage
-cut prints as ``LogicalRDD [cols], false``, which carries no RDD id.
+counter (``x_12``) and a scratch directory path past its
+``<kind>_<sf>`` (``queries/scratch.py``: a pid, then per-write file ids)
+are masked, so two dumps of the same plan, from any two processes, are
+byte-identical and ``diff -r`` between two output directories shows only
+real plan changes. A lineage cut prints as ``LogicalRDD [cols], false``,
+which carries no RDD id.
 """
 
 from __future__ import annotations
@@ -25,7 +25,7 @@ _MASKS = (
     (re.compile(r"#\d+L?"), "#"),
     (re.compile(r"plan_id=\d+"), "plan_id="),
     (re.compile(r"(lambda \w+?)_\d+"), r"\1_"),
-    (re.compile(r"(txnlog_merge_[^/\s]*)_\d+[^\s,\]]*"), r"\1_<pid>/..."),
+    (re.compile(r"(/[a-z]+(?:_[a-z]+)+_[^/\s_]+)_\d+(?:/[^\s,\]]*)?"), r"\1_<pid>/..."),
 )
 
 

@@ -659,33 +659,7 @@ def triangle_count_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from ..operators.graph import triangle_counts
 
-    # Edge construction is basket-at-a-time: one groupBy collapses each
-    # order to its sorted distinct-part array (replacing the former
-    # distinct + window-count + self-join — three shuffles — with one),
-    # the size cap filters on the array, and the pair expansion is the
-    # same map-side higher-order transform the wedge stage uses. Only the
-    # pair DISTINCT shuffles pair-sized data.
-    baskets = (
-        load_table(spark, sf_dir, "lineitem")
-        .groupBy("l_orderkey")
-        .agg(F.sort_array(F.collect_set("l_partkey")).alias("parts"))
-        .filter(F.size("parts") <= 25)
-    )
-    edges = (
-        baskets.select(
-            F.explode(
-                F.flatten(
-                    F.expr(
-                        "transform(parts, (x, i) -> "
-                        "transform(slice(parts, i + 2, size(parts)), "
-                        "y -> struct(x AS u, y AS v)))"
-                    )
-                )
-            ).alias("uv")
-        )
-        .select(F.col("uv.u").alias("u"), F.col("uv.v").alias("v"))
-        .distinct()
-    )
+    edges = copurchase_edges(spark, sf_dir)
     return (
         triangle_counts(edges)
         .orderBy(F.col("triangles").desc(), F.col("node").asc())
@@ -756,38 +730,37 @@ FROM l{iters} GROUP BY 1"""
     )
 
 
+def copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Distinct ``(u, v)`` part pairs ``u < v`` bought together in an order
+    of at most 25 distinct parts: the co-occurrence core over the distinct
+    (order, part) rows. Without ``n_co`` the pair aggregate is a
+    DISTINCT."""
+    from ..operators.pairs import _cooccur
+
+    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey").distinct()
+    return _cooccur(li, "l_orderkey", "l_partkey", max_group=25).select(
+        F.col("i").alias("u"), F.col("j").alias("v")
+    )
+
+
+def sampled_copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """:func:`copurchase_edges` thinned to a deterministic 1-in-20 sample
+    by md5 of ``"<u>_<v>"`` (the round7 jaccard/k-core construction,
+    ``round8._COPURCHASE_CTE`` on the oracle side)."""
+    from ..llmprep.text import token_hash32
+
+    key = F.concat(F.col("u").cast("string"), F.lit("_"), F.col("v").cast("string"))
+    return copurchase_edges(spark, sf_dir).filter(token_hash32(key) % 20 == 0)
+
+
 def capped_copurchase_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Distinct u<v co-purchase part pairs over ≤25-part baskets — the
-    exact edge set behind :func:`lpa_label_cte` (shared by the LPA and
-    modularity queries). Basket-at-a-time pair expansion (one shuffle):
-    collapse each order to its sorted distinct-part array, cap basket
-    size, expand u<v pairs map-side, DISTINCT the pair stream.
+    """:func:`copurchase_edges` — the exact edge set behind
+    :func:`lpa_label_cte` (shared by the LPA and modularity queries).
 
     Returned lazily checkpointed: consumers fan the edge set out (both
     union directions, modularity's three references) and the basket
     fan-out + distinct would otherwise re-execute per reference."""
-    baskets = (
-        load_table(spark, sf_dir, "lineitem")
-        .groupBy("l_orderkey")
-        .agg(F.sort_array(F.collect_set("l_partkey")).alias("parts"))
-        .filter(F.size("parts") <= 25)
-    )
-    return (
-        baskets.select(
-            F.explode(
-                F.flatten(
-                    F.expr(
-                        "transform(parts, (x, i) -> "
-                        "transform(slice(parts, i + 2, size(parts)), "
-                        "y -> struct(x AS u, y AS v)))"
-                    )
-                )
-            ).alias("p")
-        )
-        .select("p.u", "p.v")
-        .distinct()
-        .transform(lineage_cut)
-    )
+    return copurchase_edges(spark, sf_dir).transform(lineage_cut)
 
 
 @register("lpa_copurchase_communities", oracle=_lpa_oracle(), tags=("LLM", "iterative", "graph"))

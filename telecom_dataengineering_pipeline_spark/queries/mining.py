@@ -86,37 +86,10 @@ def k_core_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     one map-side-combined degree count + two semi-joins; the survivor set
     only shrinks and nothing collects (plan growth kept linear by the
     operator's per-round lazy localCheckpoint)."""
-    from ..llmprep.text import token_hash32
     from ..operators.graph import k_core
+    from .advanced import sampled_copurchase_edges
 
-    baskets = (
-        load_table(spark, sf_dir, "lineitem")
-        .groupBy("l_orderkey")
-        .agg(F.sort_array(F.collect_set("l_partkey")).alias("parts"))
-        .filter(F.size("parts") <= 25)
-    )
-    pairs = (
-        baskets.select(
-            F.explode(
-                F.flatten(
-                    F.expr(
-                        "transform(parts, (x, i) -> "
-                        "transform(slice(parts, i + 2, size(parts)), "
-                        "y -> struct(x AS u, y AS v)))"
-                    )
-                )
-            ).alias("p")
-        )
-        .select("p.u", "p.v")
-        .distinct()
-    )
-    sampled = pairs.filter(
-        token_hash32(
-            F.concat(F.col("u").cast("string"), F.lit("_"), F.col("v").cast("string"))
-        )
-        % 20
-        == 0
-    )
+    sampled = sampled_copurchase_edges(spark, sf_dir)
     return k_core(sampled, k=_KCORE_K, rounds=8)
 
 

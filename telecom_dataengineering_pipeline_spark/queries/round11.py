@@ -17,6 +17,7 @@ from pyspark.sql import functions as F
 
 from ..sources.catalog import load_table
 from ..streaming.staging import pin_staging_mtimes
+from .scratch import scratch_dir
 from .registry import register
 
 # ---------------------------------------------------------------------------
@@ -457,29 +458,9 @@ FROM deg LEFT JOIN tcount ON tcount.node = deg.node
 @register("clustering_coeff_copurchase", oracle=_CC_ORACLE, tags=("LLM", "graph"))
 def clustering_coeff_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.graph import local_clustering_coefficient
+    from .advanced import copurchase_edges
 
-    baskets = (
-        load_table(spark, sf_dir, "lineitem")
-        .groupBy("l_orderkey")
-        .agg(F.sort_array(F.collect_set("l_partkey")).alias("parts"))
-        .filter(F.size("parts") <= 25)
-    )
-    edges = (
-        baskets.select(
-            F.explode(
-                F.flatten(
-                    F.expr(
-                        "transform(parts, (x, i) -> "
-                        "transform(slice(parts, i + 2, size(parts)), "
-                        "y -> struct(x AS u, y AS v)))"
-                    )
-                )
-            ).alias("uv")
-        )
-        .select(F.col("uv.u").alias("u"), F.col("uv.v").alias("v"))
-        .distinct()
-    )
-    return local_clustering_coefficient(edges)
+    return local_clustering_coefficient(copurchase_edges(spark, sf_dir))
 
 
 # ---------------------------------------------------------------------------
@@ -637,8 +618,6 @@ FROM orders WHERE o_orderkey % 5 != 0 AND o_orderkey >= 1000
 @register("iceberg_export_roundtrip", oracle=_ICEBERG_RT_ORACLE, tags=("S7", "interop"))
 def iceberg_export_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
-    import shutil
-    import tempfile
 
     from ..sources.iceberg_export import (
         export_iceberg_snapshot,
@@ -653,11 +632,7 @@ def iceberg_export_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("o_totalprice").cast("decimal(12,2)").alias("price"),
         F.col("o_orderstatus").alias("status"),
     )
-    scratch = os.path.join(
-        tempfile.gettempdir(),
-        f"iceberg_rt_{os.path.basename(sf_dir.rstrip('/'))}_{os.getpid()}",
-    )
-    shutil.rmtree(scratch, ignore_errors=True)
+    scratch = scratch_dir("iceberg_rt", sf_dir)
     t = TxnLogTable(os.path.join(scratch, "src"), stat_cols=("o_orderkey",))
     t.create_or_replace(target)
     # MOR deletion vector so the LOGICAL snapshot diverges from the
@@ -916,27 +891,11 @@ def _bf_oracle() -> str:
 )
 def sssp_copurchase_costs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.graph import bellman_ford_distance
+    from ..operators.pairs import _cooccur
 
-    baskets = (
-        load_table(spark, sf_dir, "lineitem")
-        .groupBy("l_orderkey")
-        .agg(F.sort_array(F.collect_set("l_partkey")).alias("parts"))
-        .filter(F.size("parts") <= 25)
-    )
-    pairs = (
-        baskets.select(
-            F.explode(
-                F.flatten(
-                    F.expr(
-                        "transform(parts, (x, i) -> "
-                        "transform(slice(parts, i + 2, size(parts)), "
-                        "y -> struct(x AS u, y AS v)))"
-                    )
-                )
-            ).alias("uv")
-        )
-        .groupBy(F.col("uv.u").alias("u"), F.col("uv.v").alias("v"))
-        .agg(F.count(F.lit(1)).cast("long").alias("pc"))
+    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey").distinct()
+    pairs = _cooccur(li, "l_orderkey", "l_partkey", max_group=25).select(
+        F.col("i").alias("u"), F.col("j").alias("v"), F.col("n_co").alias("pc")
     )
     w = (F.lit(1000) / F.col("pc")).cast("long") + 1  # 1000 // pc + 1
     # Both edge directions via a map-side explode instead of a union of a

@@ -32,6 +32,7 @@ from ..plans.medallion import REGION_MAP, MedallionPipeline
 from ..sources.catalog import load_table
 from ..sources.generators import TOWERS
 from ..streaming.staging import pin_staging_mtimes
+from .scratch import scratch_dir
 from .registry import register
 
 # state -> region CASE arms, shared by the oracle builder below.
@@ -192,11 +193,7 @@ def medallion_fact_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The REAL composed pipeline: mapped bronze -> ``plans/medallion.py``
     silver/gold stage methods (real parquet between layers, quality gate
     raised on red) -> one tall relation over all three gold surfaces."""
-    base_dir = os.path.join(
-        tempfile.gettempdir(),
-        f"medallion_gate_{os.path.basename(sf_dir.rstrip('/'))}_{os.getpid()}",
-    )
-    shutil.rmtree(base_dir, ignore_errors=True)
+    base_dir = scratch_dir("medallion_gate", sf_dir)
     pipe = MedallionPipeline(spark, base_dir)
     ts = F.col("call_start_timestamp")
     pipe.write(
@@ -308,11 +305,7 @@ def iceberg_positional_delete_roundtrip(spark: SparkSession, sf_dir: str) -> Dat
     extra = o.filter(F.col("o_orderkey") % 10 == 0).select(
         "o_orderkey", price.alias("price"), F.col("o_orderstatus").alias("status")
     )
-    scratch = os.path.join(
-        tempfile.gettempdir(),
-        f"iceberg_posdel_{os.path.basename(sf_dir.rstrip('/'))}_{os.getpid()}",
-    )
-    shutil.rmtree(scratch, ignore_errors=True)
+    scratch = scratch_dir("iceberg_posdel", sf_dir)
     t = TxnLogTable(os.path.join(scratch, "src"), stat_cols=("o_orderkey",))
     t.create_or_replace(base)
     dest = os.path.join(scratch, "ice")

@@ -30,6 +30,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..sources.catalog import load_table
+from .scratch import scratch_dir
 from .registry import register
 from ..lineage import lineage_cut
 
@@ -341,8 +342,6 @@ FROM extra
 )
 def iceberg_equality_delete_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
-    import shutil
-    import tempfile
 
     from ..sources.iceberg_export import (
         append_iceberg_snapshot,
@@ -366,11 +365,7 @@ def iceberg_equality_delete_roundtrip(spark: SparkSession, sf_dir: str) -> DataF
         (price + 1000).cast("decimal(12,2)").alias("price"),
         F.col("o_orderstatus").alias("status"),
     )
-    scratch = os.path.join(
-        tempfile.gettempdir(),
-        f"iceberg_eqdel_{os.path.basename(sf_dir.rstrip('/'))}_{os.getpid()}",
-    )
-    shutil.rmtree(scratch, ignore_errors=True)
+    scratch = scratch_dir("iceberg_eqdel", sf_dir)
     t = TxnLogTable(os.path.join(scratch, "src"), stat_cols=("o_orderkey",))
     t.create_or_replace(base)
     dest = os.path.join(scratch, "ice")

@@ -41,7 +41,6 @@ overflow (round-9 recipe).
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -50,6 +49,7 @@ from ..llmprep.dedup import MERSENNE_31, _perm_constants
 from ..sources.catalog import load_table
 from .llmprep import _TOKS
 from .mining import _ER_CTES, _ER_MAX_DIST
+from .scratch import scratch_dir
 from .registry import register
 
 # Split bucket anchored on the entity-resolution cluster id — the same md5
@@ -422,10 +422,7 @@ def dedup_lsh_probe_prepared_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     banded, shingles = lsh_index_tables(
         docs.filter(F.col("doc_id") % 2 == 0), engine_neutral_hash=neutral
     )
-    base = os.path.join(
-        tempfile.gettempdir(),
-        f"lsh_index_{os.path.basename(sf_dir.rstrip('/'))}_{os.getpid()}",
-    )
+    base = scratch_dir("lsh_index", sf_dir)
     banded.write.mode("overwrite").parquet(os.path.join(base, "banded"))
     shingles.write.mode("overwrite").parquet(os.path.join(base, "shingles"))
     return incremental_lsh_probe_prepared(

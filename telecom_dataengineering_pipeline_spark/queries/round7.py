@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..sources.catalog import load_table
+from .scratch import scratch_dir
 from .registry import register
 from ..lineage import lineage_cut
 
@@ -312,37 +313,10 @@ WHERE c.common >= 1
     tags=("LLM", "graph"),
 )
 def copurchase_neighborhood_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..llmprep.text import token_hash32
     from ..operators.graph import neighborhood_jaccard
+    from .advanced import sampled_copurchase_edges
 
-    baskets = (
-        load_table(spark, sf_dir, "lineitem")
-        .groupBy("l_orderkey")
-        .agg(F.sort_array(F.collect_set("l_partkey")).alias("parts"))
-        .filter(F.size("parts") <= 25)
-    )
-    pairs = (
-        baskets.select(
-            F.explode(
-                F.flatten(
-                    F.expr(
-                        "transform(parts, (x, i) -> "
-                        "transform(slice(parts, i + 2, size(parts)), "
-                        "y -> struct(x AS u, y AS v)))"
-                    )
-                )
-            ).alias("p")
-        )
-        .select("p.u", "p.v")
-        .distinct()
-    )
-    sampled = pairs.filter(
-        token_hash32(
-            F.concat(F.col("u").cast("string"), F.lit("_"), F.col("v").cast("string"))
-        )
-        % 20
-        == 0
-    )
+    sampled = sampled_copurchase_edges(spark, sf_dir)
     return neighborhood_jaccard(sampled, max_hub_degree=_JACCARD_HUB_CAP)
 
 
@@ -411,9 +385,6 @@ FROM orders WHERE o_orderkey % 4 IN (0, 1, 2)
 
 @register("txnlog_column_defaults", oracle=_DEFAULTS_ORACLE, tags=("S7", "M4"))
 def txnlog_column_defaults(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import shutil
-    import tempfile
 
     from ..sources.txnlog import TxnLogTable
 
@@ -422,11 +393,7 @@ def txnlog_column_defaults(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("o_orderkey").alias("orderkey"),
         F.col("o_totalprice").cast("decimal(12,2)").cast("double").alias("price"),
     ]
-    path = os.path.join(
-        tempfile.gettempdir(),
-        f"txnlog_defaults_{os.path.basename(sf_dir.rstrip('/'))}_{os.getpid()}",
-    )
-    shutil.rmtree(path, ignore_errors=True)
+    path = scratch_dir("txnlog_defaults", sf_dir)
     t = TxnLogTable(path, stat_cols=("orderkey",))
     t.create_or_replace(o.filter(F.col("o_orderkey") % 4 == 0).select(*base_cols))
     t.add_column(spark, "segment", "string", "'unassigned'")  # existsDefault

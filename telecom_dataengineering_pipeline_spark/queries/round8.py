@@ -1020,36 +1020,9 @@ def _sampled_copurchase_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     Returned lazily checkpointed: every caller fans the relation out
     (direction unions, seed discovery, degree counts), and without the cut
     each reference re-executes the basket fan-out + distinct."""
-    from ..llmprep.text import token_hash32
+    from .advanced import sampled_copurchase_edges
 
-    baskets = (
-        load_table(spark, sf_dir, "lineitem")
-        .groupBy("l_orderkey")
-        .agg(F.sort_array(F.collect_set("l_partkey")).alias("parts"))
-        .filter(F.size("parts") <= 25)
-    )
-    pairs = (
-        baskets.select(
-            F.explode(
-                F.flatten(
-                    F.expr(
-                        "transform(parts, (x, i) -> "
-                        "transform(slice(parts, i + 2, size(parts)), "
-                        "y -> struct(x AS u, y AS v)))"
-                    )
-                )
-            ).alias("p")
-        )
-        .select("p.u", "p.v")
-        .distinct()
-    )
-    return pairs.filter(
-        token_hash32(
-            F.concat(F.col("u").cast("string"), F.lit("_"), F.col("v").cast("string"))
-        )
-        % 20
-        == 0
-    ).transform(lineage_cut)
+    return sampled_copurchase_edges(spark, sf_dir).transform(lineage_cut)
 
 
 # ---------------------------------------------------------------------------

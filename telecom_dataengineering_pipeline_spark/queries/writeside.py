@@ -17,6 +17,7 @@ from ..functions.keys import record_hash, surrogate_key
 from ..functions.masking import mask_name
 from ..operators.merge import merge_upsert
 from ..sources.catalog import load_table
+from .scratch import scratch_dir
 from .registry import register
 
 # ---------------------------------------------------------------------------
@@ -130,9 +131,6 @@ def scd2_customer_dim(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_REMOVED_AT_EXIT: set[str] = set()  # scratch txn-log tables this process removes at exit
-
-
 @register("merge_upsert_orders_txnlog", oracle=_MERGE_ORACLE, tags=("M1", "S7"), bench=True)
 def merge_upsert_orders_txnlog(spark: SparkSession, sf_dir: str) -> DataFrame:
     """M1 MERGE executed THROUGH the transaction-log table format
@@ -141,11 +139,6 @@ def merge_upsert_orders_txnlog(spark: SparkSession, sf_dir: str) -> DataFrame:
     copy-on-write commit, and the result is read back from the resulting
     log snapshot. Same oracle as ``merge_upsert_orders`` — the storage
     format must not change MERGE semantics."""
-    import atexit
-    import os
-    import shutil
-    import tempfile
-
     from ..sources.txnlog import TxnLogTable
 
     o = load_table(spark, sf_dir, "orders")
@@ -162,20 +155,7 @@ def merge_upsert_orders_txnlog(spark: SparkSession, sf_dir: str) -> DataFrame:
         (price * F.lit(1.1).cast("decimal(3,2)")).cast("decimal(14,4)").alias("price"),
         F.lit("U").alias("status"),
     )
-    # Per-process scratch table, rebuilt from scratch each run so the query
-    # stays deterministic and re-runnable. The PID in the path keeps a bench
-    # run that overlaps a correctness run from racing on rmtree + commits —
-    # determinism only needs stability within one invocation. The process
-    # removes the table when it exits (the returned frame reads it until
-    # then).
-    path = os.path.join(
-        tempfile.gettempdir(),
-        f"txnlog_merge_{os.path.basename(sf_dir.rstrip('/'))}_{os.getpid()}",
-    )
-    if path not in _REMOVED_AT_EXIT:
-        _REMOVED_AT_EXIT.add(path)
-        atexit.register(shutil.rmtree, path, ignore_errors=True)
-    shutil.rmtree(path, ignore_errors=True)
+    path = scratch_dir("txnlog_merge", sf_dir)
     t = TxnLogTable(path, stat_cols=("o_orderkey",))
     t.create_or_replace(target)
     t.merge_keep_latest(
@@ -228,10 +208,6 @@ def txnlog_table_changes(spark: SparkSession, sf_dir: str) -> DataFrame:
     nothing for rows merely carried over. The reference gets this from
     Iceberg's changelog; here it is derived from the commit log's file
     deltas."""
-    import os
-    import shutil
-    import tempfile
-
     from ..sources.txnlog import TxnLogTable
 
     o = load_table(spark, sf_dir, "orders")
@@ -248,11 +224,7 @@ def txnlog_table_changes(spark: SparkSession, sf_dir: str) -> DataFrame:
         (price * F.lit(1.1).cast("decimal(3,2)")).cast("decimal(14,4)").alias("price"),
         F.lit("U").alias("status"),
     )
-    path = os.path.join(
-        tempfile.gettempdir(),
-        f"txnlog_cdf_{os.path.basename(sf_dir.rstrip('/'))}_{os.getpid()}",
-    )
-    shutil.rmtree(path, ignore_errors=True)
+    path = scratch_dir("txnlog_cdf", sf_dir)
     t = TxnLogTable(path, stat_cols=("o_orderkey",))
     t.create_or_replace(target)
     t.merge_keep_latest(
@@ -300,8 +272,6 @@ def incremental_matview_sales(spark: SparkSession, sf_dir: str) -> DataFrame:
     files holding them. Final contents must equal a from-scratch aggregate
     of the final base state — which is what the oracle computes."""
     import os
-    import shutil
-    import tempfile
 
     from ..operators.matview import IncrementalRollup
     from ..sources.txnlog import TxnLogTable
@@ -323,11 +293,7 @@ def incremental_matview_sales(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("price") + F.lit(100)).cast("decimal(12,2)").alias("price"),
     )
 
-    root = os.path.join(
-        tempfile.gettempdir(),
-        f"txnlog_ivm_{os.path.basename(sf_dir.rstrip('/'))}_{os.getpid()}",
-    )
-    shutil.rmtree(root, ignore_errors=True)
+    root = scratch_dir("txnlog_ivm", sf_dir)
     base = TxnLogTable(os.path.join(root, "base"), stat_cols=("o_orderkey",))
     base.create_or_replace(initial)  # v0
     base.append(appended)  # v1
@@ -369,10 +335,6 @@ def delete_where_orders_txnlog(spark: SparkSession, sf_dir: str) -> DataFrame:
     """GDPR-shaped DELETE: commit the snapshot, delete a key range through
     the log (only files whose stats admit a match are rewritten), read the
     result back from the new version. Must equal filtering the source."""
-    import os
-    import shutil
-    import tempfile
-
     from ..sources.txnlog import TxnLogTable
 
     o = load_table(spark, sf_dir, "orders")
@@ -381,11 +343,7 @@ def delete_where_orders_txnlog(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("o_orderstatus").alias("status"),
         F.col("o_totalprice").cast("decimal(12,2)").alias("price"),
     )
-    path = os.path.join(
-        tempfile.gettempdir(),
-        f"txnlog_del_{os.path.basename(sf_dir.rstrip('/'))}_{os.getpid()}",
-    )
-    shutil.rmtree(path, ignore_errors=True)
+    path = scratch_dir("txnlog_del", sf_dir)
     t = TxnLogTable(path, stat_cols=("o_orderkey",))
     t.create_or_replace(target)
     t.delete_where(spark, [("o_orderkey", ">=", 1000), ("o_orderkey", "<", 5000)])
@@ -469,10 +427,6 @@ def backfill_replace_where_txnlog(spark: SparkSession, sf_dir: str) -> DataFrame
     ONE replace_where commit (recomputed at +10%); the read-back must equal
     applying the restatement to the source. Stats-pruned: only files that
     could hold 1-URGENT rows are rewritten."""
-    import os
-    import shutil
-    import tempfile
-
     from ..sources.txnlog import TxnLogTable
 
     o = load_table(spark, sf_dir, "orders")
@@ -482,11 +436,7 @@ def backfill_replace_where_txnlog(spark: SparkSession, sf_dir: str) -> DataFrame
         F.col("o_orderpriority").alias("priority"),
         price.cast("decimal(14,4)").alias("price"),
     )
-    path = os.path.join(
-        tempfile.gettempdir(),
-        f"txnlog_rw_{os.path.basename(sf_dir.rstrip('/'))}_{os.getpid()}",
-    )
-    shutil.rmtree(path, ignore_errors=True)
+    path = scratch_dir("txnlog_rw", sf_dir)
     t = TxnLogTable(path, stat_cols=("priority",))
     t.create_or_replace(rows, cluster_by=("priority",))
     restated = rows.filter(F.col("priority") == "1-URGENT").select(
@@ -552,8 +502,6 @@ def txnlog_clone_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
     source's post-clone append; the source shows the append without the
     clone's merge. One result set, role-tagged, fully value-checked."""
     import os
-    import shutil
-    import tempfile
 
     from ..sources.txnlog import TxnLogTable
 
@@ -575,11 +523,7 @@ def txnlog_clone_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
     extra = shaped(F.col("o_orderkey") % 3 == 0, 1, F.lit("A"))
     upd = shaped(F.col("o_orderkey") % 2 == 0, 2, F.lit("U"), price_mult=1.1)
 
-    root = os.path.join(
-        tempfile.gettempdir(),
-        f"txnlog_clone_{os.path.basename(sf_dir.rstrip('/'))}_{os.getpid()}",
-    )
-    shutil.rmtree(root, ignore_errors=True)
+    root = scratch_dir("txnlog_clone", sf_dir)
     src = TxnLogTable(os.path.join(root, "src"), stat_cols=("o_orderkey",))
     src.create_or_replace(target)
     clone = src.clone_shallow(os.path.join(root, "dst"))
@@ -645,8 +589,6 @@ def cdf_replica_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     txn ids (exactly-once), with deletes applied as one distributed
     merge-delete commit per batch — keys never touch the driver."""
     import os
-    import shutil
-    import tempfile
 
     from ..sources.txnlog import TxnLogTable
     from ..streaming.cdf_consume import ChangeFeedCursor
@@ -668,11 +610,7 @@ def cdf_replica_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
         price.cast("decimal(14,4)").alias("price"),
         F.lit("N").alias("status"),
     )
-    root = os.path.join(
-        tempfile.gettempdir(),
-        f"cdf_replica_{os.path.basename(sf_dir.rstrip('/'))}_{os.getpid()}",
-    )
-    shutil.rmtree(root, ignore_errors=True)
+    root = scratch_dir("cdf_replica", sf_dir)
     src = TxnLogTable(os.path.join(root, "src"), stat_cols=("orderkey",))
     sink = TxnLogTable(os.path.join(root, "sink"), stat_cols=("orderkey",))
     src.create_or_replace(base)
@@ -719,10 +657,6 @@ def txnlog_generated_columns(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Writers stop carrying derived partition keys: the table computes
     them (Delta GENERATED ALWAYS AS). Slice 1 creates the table with the
     column present (validated); slice 2 appends without it (computed)."""
-    import os
-    import shutil
-    import tempfile
-
     from ..sources.txnlog import TxnLogTable
 
     o = load_table(spark, sf_dir, "orders")
@@ -735,11 +669,7 @@ def txnlog_generated_columns(spark: SparkSession, sf_dir: str) -> DataFrame:
         *base_cols, F.expr("substr(date_format(o_orderdate, 'yyyy-MM-dd'), 1, 7)").alias("o_month")
     )
     slice2 = o.filter(F.col("o_orderkey") % 4 == 1).select(*base_cols)  # no o_month
-    path = os.path.join(
-        tempfile.gettempdir(),
-        f"txnlog_gencol_{os.path.basename(sf_dir.rstrip('/'))}_{os.getpid()}",
-    )
-    shutil.rmtree(path, ignore_errors=True)
+    path = scratch_dir("txnlog_gencol", sf_dir)
     t = TxnLogTable(path, stat_cols=("orderkey",))
     t.create_or_replace(slice1)
     t.set_generated_column(spark, "o_month", "substr(odate, 1, 7)")
@@ -767,10 +697,6 @@ def txnlog_partition_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     never path-based, so old-layout and new-layout files coexist and a
     predicate read stays exact across generations (the test suite pins the
     file-count pruning; this query pins the values)."""
-    import os
-    import shutil
-    import tempfile
-
     from ..sources.txnlog import TxnLogTable
 
     o = load_table(spark, sf_dir, "orders")
@@ -781,11 +707,7 @@ def txnlog_partition_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     ]
     gen1 = o.filter(F.col("o_orderkey") % 4 == 2).select(*cols)
     gen2 = o.filter(F.col("o_orderkey") % 4 == 3).select(*cols)
-    path = os.path.join(
-        tempfile.gettempdir(),
-        f"txnlog_cluster_{os.path.basename(sf_dir.rstrip('/'))}_{os.getpid()}",
-    )
-    shutil.rmtree(path, ignore_errors=True)
+    path = scratch_dir("txnlog_cluster", sf_dir)
     t = TxnLogTable(path, stat_cols=("orderkey", "status"))
     t.create_or_replace(gen1)
     t.set_clustering(["status"])  # evolution: metadata-only
@@ -819,8 +741,6 @@ FROM base GROUP BY 1
 @register("matview_cursor_refresh", oracle=_MV_CURSOR_ORACLE, tags=("T7", "M1", "S7"))
 def matview_cursor_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
-    import shutil
-    import tempfile
 
     from ..operators.matview import IncrementalRollup
     from ..sources.txnlog import TxnLogTable
@@ -838,11 +758,7 @@ def matview_cursor_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("o_orderstatus").alias("status"),
         (price * 2).cast("decimal(12,2)").alias("price"),
     )
-    root = os.path.join(
-        tempfile.gettempdir(),
-        f"mv_cursor_{os.path.basename(sf_dir.rstrip('/'))}_{os.getpid()}",
-    )
-    shutil.rmtree(root, ignore_errors=True)
+    root = scratch_dir("mv_cursor", sf_dir)
     base = TxnLogTable(os.path.join(root, "base"), stat_cols=("orderkey",))
     rollup = IncrementalRollup(
         TxnLogTable(os.path.join(root, "view"), stat_cols=("status",)),

@@ -752,15 +752,15 @@ def test_seasonal_decompose_one_series_exchange(spark, sf_smoke):
 
 
 def test_winnowing_pairs_lineage_cut(spark, sf_smoke):
-    """The fingerprint relation feeds the df-count filter AND both sides
-    of the candidate self-join; the localCheckpoint in winnowing_pairs is
-    load-bearing (without it the tokenize→hash→winnow pipeline re-runs
-    4×, the round-9 FileScan audit). Pin: every consumer reads the
-    checkpoint RDD — zero document FileScans and zero Window operators
-    survive in the final plan."""
+    """The capped fingerprint relation feeds both sides of the candidate
+    self-join; the localCheckpoint in winnowing_pairs is load-bearing
+    (without it the tokenize→hash→winnow pipeline re-runs per side, the
+    round-9 FileScan audit). Pin: every consumer reads the checkpoint
+    RDD — zero document FileScans and zero Window operators survive in
+    the final plan."""
     plan = _physical(spark, "winnowing_fingerprint_pairs", sf_smoke)
     assert plan.count("FileScan") == 0  # all branches behind the cut
-    assert plan.count("ExistingRDD") >= 3  # df-count + self-join sides
+    assert plan.count("ExistingRDD") >= 2  # both self-join sides (the df cap runs pre-cut)
     assert re.search(r"\bWindow ", plan) is None  # winnow ran pre-cut once
 
 
@@ -811,34 +811,40 @@ def test_plan_dump_is_stable_within_a_session(spark, sf_smoke):
 
 
 def test_plan_dump_masks_the_txnlog_scratch_pid():
-    """merge_upsert_orders_txnlog's scratch table path carries the pid and
-    per-write file ids, so dumps from two processes differ only there until
-    it is masked."""
+    """A scratch directory path (``queries/scratch.py``) carries the pid
+    and per-write file ids, so dumps from two processes differ only there
+    until it is masked — for every kind, not only the txn-log merge."""
     from telecom_dataengineering_pipeline_spark.plan_dump import mask
 
-    def line(pid, uid):
+    def line(kind, pid, uid):
         return (
             "Location: InMemoryFileIndex(1 paths)"
-            f"[file:/tmp/txnlog_merge_sf0.001_{pid}/data/{uid}..., PartitionFilters: []"
+            f"[file:/tmp/{kind}_sf0.001_{pid}/data/{uid}..., PartitionFilters: []"
         )
 
-    assert mask(line(4242, "8a5b0")) == mask(line(17, "2949c1d2")) != line(17, "2949c1d2")
-    assert mask(line(17, "ab")).endswith("txnlog_merge_sf0.001_<pid>/..., PartitionFilters: []")
+    for kind in ("txnlog_merge", "medallion_gate"):
+        assert mask(line(kind, 4242, "8a5b0")) == mask(line(kind, 17, "2949c1d2"))
+        assert mask(line(kind, 17, "ab")) != line(kind, 17, "ab")
+        assert mask(line(kind, 17, "ab")).endswith(
+            f"{kind}_sf0.001_<pid>/..., PartitionFilters: []"
+        )
+    assert mask(line("txnlog_merge", 1, "a")) != mask(line("medallion_gate", 1, "a"))
 
 
-def test_txnlog_merge_scratch_table_removed_at_exit(spark, sf_smoke, monkeypatch):
-    """Building merge_upsert_orders_txnlog registers the removal of its
-    scratch table with ``atexit``; the registered call removes it."""
+@pytest.mark.parametrize("name", ["merge_upsert_orders_txnlog", "medallion_fact_build"])
+def test_txnlog_merge_scratch_table_removed_at_exit(spark, sf_smoke, monkeypatch, name):
+    """Building a query that writes a scratch directory registers its
+    removal with ``atexit`` once; the registered call removes it."""
     import atexit
     import os
 
-    from telecom_dataengineering_pipeline_spark.queries import writeside
+    from telecom_dataengineering_pipeline_spark.queries import scratch
 
     calls = []
     monkeypatch.setattr(atexit, "register", lambda fn, *a, **kw: calls.append((fn, a, kw)))
-    monkeypatch.setattr(writeside, "_REMOVED_AT_EXIT", set())
-    REGISTRY["merge_upsert_orders_txnlog"].fn(spark, sf_smoke)
-    (path,) = writeside._REMOVED_AT_EXIT
+    monkeypatch.setattr(scratch, "_REMOVED_AT_EXIT", set())
+    REGISTRY[name].fn(spark, sf_smoke)
+    (path,) = scratch._REMOVED_AT_EXIT
     mine = [c for c in calls if path in c[1]]  # imports may register their own
     assert os.path.isdir(path) and len(mine) == 1
     fn, args, kwargs = mine[0]
